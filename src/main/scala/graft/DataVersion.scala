@@ -2,23 +2,23 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Content-version keys for the per-dataset memo caches (trained
-  * centroids/codebooks/BPE models, checkpointed derived tables,
-  * resolved layout readers).
+/** Content-version keys for the [[Memo]] entries (trained
+  * centroids/codebooks/BPE models, checkpointed derived tables).
   *
-  * Every memo in the engine is keyed through here so that REGENERATED
+  * Every [[Memo]] key except the layout readers' (whose layout path is
+  * itself content-versioned) is built here so that REGENERATED
   * source data under the same path — which the test harness does
   * between rounds, and a production lake does on every backfill — can
   * never serve a stale artifact: the key carries a per-file
   * name/size/mtime fingerprint of the source table, so new content is
-  * a new key and the old entry simply goes cold. Caches whose values
-  * hold session state (checkpointed DataFrames strongly reference
-  * their SparkSession, so a weak/soft session key would never collect
-  * — the round-8 WeakHashMap lesson) also mix in the session identity
-  * and live for the JVM, which is honest: the JVMs that hold them
-  * (one sbt test run, one Bench/Verify main) are short-lived by
-  * design, and the values are model-artifact-sized, not corpus
-  * copies.
+  * a new key and the old entry simply goes cold. Values that hold
+  * session state (checkpointed DataFrames strongly reference their
+  * SparkSession, so a weak/soft session key would never collect — the
+  * round-8 WeakHashMap lesson) also mix in the session identity;
+  * [[Memo]] drops them once that session stops. Session-free values
+  * live for the JVM, which is honest: the JVMs that hold them (one sbt
+  * test run, one Bench/Verify main) are short-lived by design, and the
+  * values are model-artifact-sized, not corpus copies.
   */
 object DataVersion {
 

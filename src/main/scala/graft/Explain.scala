@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan inspector: prints the formatted physical plan for one or all
   * SparkEntry queries. Usage:
   * `sbt "runMain graft.Explain [queryName ...]"` (default: all).
@@ -11,14 +9,7 @@ import org.apache.spark.sql.SparkSession
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession("ERROR")
     // bench-only rows (no oracle form) have plans worth reviewing too
     val all = SparkEntry.queries ++ SparkEntry.benchOnly
     val names = if (args.nonEmpty) args.toSeq else all.keys.toSeq.sorted

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Single-query timing harness for iteration: runs the named
   * SparkEntry queries N times each (after one warmup materialization)
   * under the same session config as [[Bench]] and prints min/median
@@ -13,7 +11,6 @@ import org.apache.spark.sql.SparkSession
 object TimeQuery {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
     // Shuffle width decouples from thread count for the big-corpus
     // rehearsals: a real cluster scales spark.sql.shuffle.partitions
@@ -21,15 +18,8 @@ object TimeQuery {
     // default width=threads makes each task's sort/hash state 100x the
     // bench shape — more partitions shrink per-task state while
     // local[cpus] still bounds concurrency.
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession("ERROR",
+      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", LocalSession.cpus))
     val benched = SparkEntry.queries ++ SparkEntry.benchOnly
     def once(name: String): Double = {
       val t0 = System.nanoTime()

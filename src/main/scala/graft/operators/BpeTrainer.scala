@@ -65,23 +65,18 @@ object BpeTrainer {
     */
   private val maxBatch = 64
 
-  /** Session-scoped trained-model memos, the [[Similarity]] /[[Pq]]
-    * discipline: a deployment trains the tokenizer ONCE and serves
-    * every consumer (merge table, segmentation, encoding, vocab
-    * export) from the stored model, so repeat queries measure the
-    * serving path, not a per-query re-train. Keyed by
-    * [[graft.DataVersion.sessionKey]] — session identity (beyond-gate
-    * entries hold checkpointed DataFrames that strongly reference
-    * their session, so the previous weak session key never collected
-    * on that path) + dir content fingerprint (a regenerated corpus
-    * retrains instead of serving a stale tokenizer) + merge budget +
-    * gate (specs force the distributed path via the gate, so the two
-    * paths never share an entry).
+  /** Memo key of one trained-tokenizer part (`merges` rows or `seg`
+    * frame), shared by the trainer and [[installModel]]. A deployment
+    * trains ONCE and serves every consumer (merge table, segmentation,
+    * encoding, vocab export) from the stored model. Session-scoped
+    * (beyond-gate segmentations are checkpointed DataFrames); the
+    * merge budget and gate are in the key, so the spec-forced
+    * distributed path never shares an entry with the driver path.
     */
-  private val modelCache =
-    new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
-
-  private def sessionModels(spark: SparkSession) = modelCache
+  private def modelKey(spark: SparkSession, dir: String, part: String,
+      merges: Int, smallTypeLimit: Long): String =
+    graft.DataVersion.sessionKey(spark, dir, "documents",
+      s"$part#$merges#$smallTypeLimit")
 
   /** Pass 1, the only corpus-sized job: whitespace word types with
     * counts, split into character symbols + the end-of-word marker.
@@ -381,58 +376,42 @@ object BpeTrainer {
     */
   def train(spark: SparkSession, dir: String,
             merges: Int = defaultMerges,
-            smallTypeLimit: Long = driverTypeLimit): DataFrame = {
+            smallTypeLimit: Long = driverTypeLimit): DataFrame =
+    mergeRows(spark, graft.Memo(modelKey(spark, dir, "merges", merges,
+      smallTypeLimit))(trainMerges(spark, dir, merges, smallTypeLimit)))
+
+  /** The un-memoized merge learning [[train]] serves from the memo
+    * (the bench-only cold row `text_bpe_train` calls it directly).
+    */
+  private[graft] def trainMerges(spark: SparkSession, dir: String,
+      merges: Int = defaultMerges,
+      smallTypeLimit: Long = driverTypeLimit): Seq[(Long, String, String, String, Long)] = {
+    val vocab = wordTypes(spark, dir)
+    if (vocab.count() <= smallTypeLimit) trainDriver(collectTypes(vocab), merges)._1
+    else trainBatches(vocab, merges)._1
+  }
+
+  private[graft] def mergeRows(spark: SparkSession,
+      learned: Seq[(Long, String, String, String, Long)]): DataFrame = {
     import spark.implicits._
-    val learned = sessionModels(spark)
-      .computeIfAbsent(graft.DataVersion.sessionKey(spark, dir, "documents",
-        s"merges#$merges#$smallTypeLimit"), _ => {
-        val vocab = wordTypes(spark, dir)
-        val rows =
-          if (vocab.count() <= smallTypeLimit)
-            trainDriver(collectTypes(vocab), merges)._1
-          else trainBatches(vocab, merges)._1
-        rows: AnyRef
-      }).asInstanceOf[Seq[(Long, String, String, String, Long)]]
     learned.toDF("rank", "left", "right", "merged", "n")
   }
 
-  /** Bench-only COLD tokenizer training (`text_bpe_train`): the full
-    * word-type corpus pass plus merge learning with NO session memo —
-    * keeps the tokenizer's training cost bench-visible (the memo plus
-    * Bench's min-of-2 warm passes otherwise discards it; every
-    * declared `text_bpe_*` row reports the warm served shape). Same
-    * driver-vs-distributed gate as [[train]]; same merge rows.
-    */
-  def trainBuild(spark: SparkSession, dir: String,
-                 merges: Int = defaultMerges,
-                 smallTypeLimit: Long = driverTypeLimit): DataFrame = {
-    import spark.implicits._
-    val vocab = wordTypes(spark, dir)
-    val rows =
-      if (vocab.count() <= smallTypeLimit)
-        trainDriver(collectTypes(vocab), merges)._1
-      else trainBatches(vocab, merges)._1
-    rows.toDF("rank", "left", "right", "merged", "n")
-  }
-
   /** Install a [[graft.ModelStore]]-reloaded tokenizer (merge table +
-    * segmentation) into the serving slots (same sessionKeys the
-    * trainer memoizes under) so every consumer — [[train]]'s merge
-    * view, [[encode]], [[fertility]], [[vocab]] — serves from the
-    * reloaded model. The segmentation frame is re-checkpointed so the
-    * slot holds a materialized table, exactly like the trained path.
+    * segmentation) into the serving slots so every consumer —
+    * [[train]]'s merge view, [[encode]], [[fertility]], [[vocab]] —
+    * serves from the reloaded model. The segmentation frame is
+    * re-checkpointed so the slot holds a materialized table, exactly
+    * like the trained path.
     */
   private[graft] def installModel(spark: SparkSession, dir: String,
       merges: Int, smallTypeLimit: Long,
       trainRows: Seq[(Long, String, String, String, Long)],
       seg: DataFrame): Unit = {
-    sessionModels(spark).put(
-      graft.DataVersion.sessionKey(spark, dir, "documents",
-        s"merges#$merges#$smallTypeLimit"), trainRows: AnyRef)
-    sessionModels(spark).put(
-      graft.DataVersion.sessionKey(spark, dir, "documents",
-        s"seg#$merges#$smallTypeLimit"),
-      seg.localCheckpoint(true): AnyRef)
+    graft.Memo.install(modelKey(spark, dir, "merges", merges, smallTypeLimit),
+      trainRows)
+    graft.Memo.install(modelKey(spark, dir, "seg", merges, smallTypeLimit),
+      seg.localCheckpoint(true))
   }
 
   /** Train-then-segment: the per-word-TYPE subword arrays under the
@@ -447,31 +426,29 @@ object BpeTrainer {
       merges: Int = defaultMerges,
       smallTypeLimit: Long = driverTypeLimit): DataFrame = {
     import spark.implicits._
-    sessionModels(spark)
-      .computeIfAbsent(graft.DataVersion.sessionKey(spark, dir, "documents",
-        s"seg#$merges#$smallTypeLimit"), _ => {
-        val vocab = wordTypes(spark, dir)
-        val seg =
-          if (vocab.count() <= smallTypeLimit) {
-            val rows = vocab.select("w", "sym", "n").collect()
-            val types = rows.map(r => (r.getSeq[String](1).toArray, r.getLong(2)))
-            val (_, finalSyms) = trainDriver(types, merges)
-            rows.map(_.getString(0)).zip(finalSyms.map(_.toSeq))
-              .toSeq.toDF("w", "sub")
-          } else {
-            val batches = trainBatches(vocab, merges)._2
-            var t = vocab.select(col("w"), col("sym"))
-            // replay the training batches: one pass (and one lineage
-            // cut) per ROUND, not per merge — a 256-rule vocabulary
-            // would otherwise nest 256 aggregate expressions in one plan
-            batches.foreach { batch =>
-              t = t.select(col("w"), applyMergeBatch(col("sym"), batch).as("sym"))
-                .localCheckpoint()
-            }
-            t.withColumnRenamed("sym", "sub")
+    graft.Memo(modelKey(spark, dir, "seg", merges, smallTypeLimit)) {
+      val vocab = wordTypes(spark, dir)
+      val seg =
+        if (vocab.count() <= smallTypeLimit) {
+          val rows = vocab.select("w", "sym", "n").collect()
+          val types = rows.map(r => (r.getSeq[String](1).toArray, r.getLong(2)))
+          val (_, finalSyms) = trainDriver(types, merges)
+          rows.map(_.getString(0)).zip(finalSyms.map(_.toSeq))
+            .toSeq.toDF("w", "sub")
+        } else {
+          val batches = trainBatches(vocab, merges)._2
+          var t = vocab.select(col("w"), col("sym"))
+          // replay the training batches: one pass (and one lineage
+          // cut) per ROUND, not per merge — a 256-rule vocabulary
+          // would otherwise nest 256 aggregate expressions in one plan
+          batches.foreach { batch =>
+            t = t.select(col("w"), applyMergeBatch(col("sym"), batch).as("sym"))
+              .localCheckpoint()
           }
-        seg.localCheckpoint(true): AnyRef
-      }).asInstanceOf[DataFrame]
+          t.withColumnRenamed("sym", "sub")
+        }
+      seg.localCheckpoint(true)
+    }
   }
 
   /** Per-language subword fertility (subwords per whitespace token)

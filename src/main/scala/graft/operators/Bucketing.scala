@@ -172,14 +172,9 @@ object Bucketing {
     * the session hashCode in the key keeps file-index state per
     * session, mirroring the catalog's session-scoped relation cache.
     */
-  private val layoutReaders =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
   private def dayLayoutTable(spark: SparkSession, dir: String): DataFrame = {
     val layout = prepareDayLayout(spark, dir)
-    layoutReaders.computeIfAbsent(
-      s"${System.identityHashCode(spark)}|$layout",
-      _ => spark.read.parquet(layout))
+    graft.Memo(s"${System.identityHashCode(spark)}|$layout")(spark.read.parquet(layout))
   }
 
   /** One-day aggregate over the day-partitioned events layout of

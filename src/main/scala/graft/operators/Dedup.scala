@@ -1080,37 +1080,14 @@ object Dedup {
   /** Memo of the materialized exact-pair table — the winnowPairs
     * discipline: BOTH the dedup_prefix_join row and [[blockingEval]]
     * consume it (the truth set costs ~8 s at sf0.1; the eval must not
-    * pay it twice in one session). Keyed by
-    * [[graft.DataVersion.sessionKey]] so regenerated data can never
-    * serve stale pairs.
+    * pay it twice in one session).
     */
-  private val prefixJoinCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+  def prefixJaccardJoin(spark: SparkSession, dir: String): DataFrame =
+    graft.Memo(graft.DataVersion.sessionKey(spark, dir, "documents", "prefixjoin"))(
+      computePrefixJaccardJoin(spark, dir).localCheckpoint())
 
-  def prefixJaccardJoin(spark: SparkSession, dir: String): DataFrame = {
-    // evict entries owned by stopped sessions: their checkpoint RDD
-    // blocks would otherwise stay pinned for the life of the JVM (and
-    // the cached DataFrames are unusable once their session stops) —
-    // the sessionKey scheme implies session lifetime, enforce it
-    prefixJoinCache.entrySet().removeIf(
-      e => e.getValue.sparkSession.sparkContext.isStopped)
-    prefixJoinCache.computeIfAbsent(
-      graft.DataVersion.sessionKey(spark, dir, "documents", "prefixjoin"),
-      _ => computePrefixJaccardJoin(spark, dir).localCheckpoint())
-  }
-
-  /** Bench-only COLD build of the exact τ-Jaccard truth-pair set
-    * (`dedup_truth_build`): [[computePrefixJaccardJoin]] straight
-    * through, NEVER [[prefixJoinCache]] — keeps the seconds-scale
-    * PPJoin truth construction bench-visible (the memo plus Bench's
-    * min-of-2 warm passes otherwise discards it; `dedup_prefix_join`
-    * reports the warm read-off). The `ann_*_prod` precedent.
-    */
-  def truthPairsBuild(spark: SparkSession, dir: String): DataFrame =
-    computePrefixJaccardJoin(spark, dir)
-
-  private def computePrefixJaccardJoin(spark: SparkSession,
-                                       dir: String): DataFrame = {
+  private[graft] def computePrefixJaccardJoin(spark: SparkSession,
+      dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val arrays = trigramArrays(spark, dir)
     // set size rides the explode (array length — no per-doc aggregate)

@@ -146,26 +146,26 @@ object Opq {
     java.math.BigDecimal.valueOf(x)
       .setScale(0, java.math.RoundingMode.HALF_UP).longValueExact()
 
-  private val rotationCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Rotation]()
+  /** Memo key of the trained rotation, shared by the trainer and
+    * [[installRotation]].
+    */
+  private def rotationKey(dir: String): String =
+    graft.DataVersion.key(dir, "embeddings", "opqrot")
 
   /** The trained rotation, memoized per dataset content version (the
     * codebook discipline).
     */
   private[graft] def trainedRotation(spark: SparkSession,
       dir: String): Rotation =
-    rotationCache.computeIfAbsent(
-      graft.DataVersion.key(dir, "embeddings", "opqrot"),
-      _ => trainRotation(spark, dir))
+    graft.Memo(rotationKey(dir))(trainRotation(spark, dir))
 
   /** Install a [[graft.ModelStore]]-reloaded rotation into the serving
-    * slot (same DataVersion key the trainer memoizes under).
+    * slot.
     */
   private[graft] def installRotation(dir: String, model: Rotation): Unit =
-    rotationCache.put(graft.DataVersion.key(dir, "embeddings", "opqrot"),
-      model)
+    graft.Memo.install(rotationKey(dir), model)
 
-  private def trainRotation(spark: SparkSession, dir: String): Rotation = {
+  private[graft] def trainRotation(spark: SparkSession, dir: String): Rotation = {
     import spark.implicits._
     val emb = Tables(spark, dir, "embeddings")
       .select(col("vec_id"), col("embedding"))
@@ -450,9 +450,8 @@ object Opq {
     * certification surface the oracle replays end-to-end
     * (`opq_rotation`).
     */
-  def rotationRows(spark: SparkSession, dir: String): DataFrame = {
+  def rotationRows(spark: SparkSession, rot: Rotation): DataFrame = {
     import spark.implicits._
-    val rot = trainedRotation(spark, dir)
     val rows = for {
       k <- 0 until rotationDims
       s <- rot.dims.indices
@@ -462,98 +461,23 @@ object Opq {
       .orderBy("out_dim", "in_dim")
   }
 
-  /** Bench-only COLD rotation training (`ann_opq_build`): the full
-    * [[trainRotation]] pipeline with NO memo, emitted as the same
-    * (out_dim, in_dim, w, lam) rows as [[rotationRows]] — keeps the
-    * OPQ training cost bench-visible (the memo plus Bench's min-of-2
-    * warm passes otherwise discards it; `opq_rotation` reports the
-    * warm served artifact). The `ann_*_prod` precedent.
+  /** The rotated corpus y = R(x − μ): [[streamingRotate]]'s narrow
+    * mapPartitions pass over the stored table with the O(d²) artifact
+    * broadcast, each coordinate rounded at 6 (the oracle's remb
+    * join-aggregate computes the same rounded sums). Width is always
+    * [[rotationDims]]; session-memoized like the stored PQ code index.
     */
-  def rotationBuild(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val rot = trainRotation(spark, dir)
-    val rows = for {
-      k <- 0 until rotationDims
-      s <- rot.dims.indices
-    } yield (rot.outDimOfRound(k).toLong, rot.dims(s).toLong,
-      rot.basis(k)(s).toDouble / 1e6, rot.lams(k).toDouble / 1e6)
-    rows.toDF("out_dim", "in_dim", "w", "lam")
-      .orderBy("out_dim", "in_dim")
-  }
-
-  private val rotatedCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
-  /** The rotated corpus y = R(x − μ), one narrow mapPartitions pass
-    * with the O(d²) artifact broadcast, each coordinate rounded at 6
-    * (the oracle's remb join-aggregate computes the same rounded
-    * sums). Width is always [[rotationDims]]; session-memoized like
-    * the stored PQ code index.
-    */
-  private[graft] def rotated(spark: SparkSession, dir: String): DataFrame = {
-    // resolve the rotation BEFORE computeIfAbsent (no nested updates)
-    val rot = trainedRotation(spark, dir)
-    rotatedCache.entrySet().removeIf(
-      e => e.getValue.sparkSession.sparkContext.isStopped)
-    rotatedCache.computeIfAbsent(
-      graft.DataVersion.sessionKey(spark, dir, "embeddings", "opqrotated"), _ => {
-        import spark.implicits._
-        val bc = spark.sparkContext.broadcast(rot)
-        Tables(spark, dir, "embeddings")
-          .select(col("vec_id"), col("embedding")).as[(Long, Seq[Float])]
-          .mapPartitions { it =>
-            val r = bc.value
-            val d = r.dims.length
-            // a vector with NO observed dims has no centered cells on
-            // the oracle side and drops out of the rotated relation —
-            // mirror that (flatMap, not map)
-            it.flatMap { case (vid, e) =>
-              // the rotation applies to RAW x (the Ge et al. form —
-              // centering served only the covariance estimate);
-              // distances are preserved either way, and uncentered
-              // application keeps the diagonal-dominant branch's
-              // permuted corpus bit-equal to what plain PQ quantizes
-              val cx = new Array[Double](d)
-              var s = 0
-              var any = false
-              while (s < d) {
-                val i = r.dims(s)
-                if (i < e.length) { cx(s) = e(i).toDouble; any = true }
-                else cx(s) = Double.NaN
-                s += 1
-              }
-              if (!any) Iterator.empty
-              else {
-                val y = new Array[Double](rotationDims)
-                var k = 0
-                while (k < rotationDims) {
-                  var acc = 0.0; var p = 0
-                  while (p < d) {
-                    // w as double = micros/1e6, the exact value the
-                    // oracle's orot carries
-                    if (!cx(p).isNaN) acc += r.basis(k)(p).toDouble / 1e6 * cx(p)
-                    p += 1
-                  }
-                  // exact closed form ⇒ the sum IS one input value
-                  // (order-independent), no determinism round needed
-                  y(r.outDimOfRound(k)) = if (r.exact) acc else round6(acc)
-                  k += 1
-                }
-                Iterator.single((vid, y.toSeq))
-              }
-            }
-          }.toDF("vec_id", "embedding")
-          .localCheckpoint(true)
-      })
-  }
+  private[graft] def rotated(spark: SparkSession, dir: String): DataFrame =
+    graft.Memo(graft.DataVersion.sessionKey(spark, dir, "embeddings", "opqrotated"))(
+      streamingRotate(Tables(spark, dir, "embeddings"), trainedRotation(spark, dir))
+        .localCheckpoint(true))
 
   /** Apply a FROZEN trained rotation to a STREAM of vectors — the
     * serve half of the rotation family (the
     * `Quantize.streamingHardNegatives` pattern): a stateless narrow
-    * projection (zero shuffles, no sort — append-mode streamable)
-    * whose per-row arithmetic is bit-equal to the batch [[rotated]]
-    * pass (same broadcast artifact, same fold order, same exact-path
-    * round rule). An ingest pipeline rotates arriving vectors with
+    * projection (zero shuffles, no sort — append-mode streamable),
+    * and the very pass the batch [[rotated]] relation runs over the
+    * stored corpus, so the two are bit-equal. An ingest pipeline rotates arriving vectors with
     * this before encoding them against the stored OPQ codebook.
     * `vecs` needs (vec_id, embedding); vectors with no observed dims
     * drop (the batch relation's semantics).
@@ -567,7 +491,15 @@ object Opq {
       .mapPartitions { it =>
         val r = bc.value
         val d = r.dims.length
+        // a vector with NO observed dims has no centered cells on the
+        // oracle side and drops out of the rotated relation — mirror
+        // that (flatMap, not map)
         it.flatMap { case (vid, e) =>
+          // the rotation applies to RAW x (the Ge et al. form —
+          // centering served only the covariance estimate); distances
+          // are preserved either way, and uncentered application keeps
+          // the diagonal-dominant branch's permuted corpus bit-equal to
+          // what plain PQ quantizes
           val cx = new Array[Double](d)
           var s = 0
           var any = false
@@ -584,9 +516,13 @@ object Opq {
             while (k < rotationDims) {
               var acc = 0.0; var p = 0
               while (p < d) {
+                // w as double = micros/1e6, the exact value the
+                // oracle's orot carries
                 if (!cx(p).isNaN) acc += r.basis(k)(p).toDouble / 1e6 * cx(p)
                 p += 1
               }
+              // exact closed form ⇒ the sum IS one input value
+              // (order-independent), no determinism round needed
               y(r.outDimOfRound(k)) = if (r.exact) acc else round6(acc)
               k += 1
             }
@@ -595,9 +531,6 @@ object Opq {
         }
       }.toDF("vec_id", "embedding")
   }
-
-  private val codebookCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(Int, Long, Seq[Double])]]()
 
   /** The PQ codebook trained on the ROTATED corpus at the production
     * width — the unchanged certified trainer ([[Pq.trainCodebookOn]]),
@@ -614,13 +547,9 @@ object Opq {
       rot.dims.zipWithIndex.forall { case (dim, s) => dim == s } &&
       rot.outDimOfRound.zipWithIndex.forall { case (o, kk) => o == kk }
     if (identityRegime) Pq.trainedCodebook(spark, dir, k)
-    else codebookCache.computeIfAbsent(
-      graft.DataVersion.key(dir, "embeddings", s"opqpq$k"),
-      _ => Pq.trainCodebookOn(rotated(spark, dir), k))
+    else graft.Memo(graft.DataVersion.key(dir, "embeddings", s"opqpq$k"))(
+      Pq.trainCodebookOn(rotated(spark, dir), k))
   }
-
-  private val indexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
 
   /** The stored (vec_id, m, code) OPQ index — built once per session
     * with the production [[Pq.encodeScalar]] pass over the rotated
@@ -629,34 +558,25 @@ object Opq {
     * measures the index as SERVED, not a per-query re-encode.
     */
   private def indexedCodes(spark: SparkSession, dir: String,
-      k: Int): DataFrame = {
-    // resolve inputs BEFORE computeIfAbsent (no nested CHM updates)
-    val remb = rotated(spark, dir)
-    val cb = opqCodebook(spark, dir, k)
-    indexCache.entrySet().removeIf(
-      e => e.getValue.sparkSession.sparkContext.isStopped)
-    indexCache.computeIfAbsent(
-      graft.DataVersion.sessionKey(spark, dir, "embeddings", s"opq$k#codes"),
-      _ => Pq.encodeScalar(remb, cb)
+      k: Int): DataFrame =
+    graft.Memo(graft.DataVersion.sessionKey(spark, dir, "embeddings", s"opq$k#codes"))(
+      Pq.encodeScalar(rotated(spark, dir), opqCodebook(spark, dir, k))
         .select(col("vec_id"), col("m"), col("code"))
         .localCheckpoint(true))
-  }
 
   /** The stored byte-packed OPQ index the packed-LUT scan reads —
     * dense-remapped and hex-packed exactly like the plain-PQ stored
     * index.
     */
   private def indexedPacked(spark: SparkSession, dir: String,
-      k: Int): DataFrame = {
-    import spark.implicits._
-    val codes = indexedCodes(spark, dir, k)
-    val cbDf = opqCodebook(spark, dir, k).toDF("m", "c_id", "c_emb")
-    indexCache.computeIfAbsent(
-      graft.DataVersion.sessionKey(spark, dir, "embeddings", s"opq$k#packed"),
-      _ => Pq.packFrom(codes, cbDf)
+      k: Int): DataFrame =
+    graft.Memo(graft.DataVersion.sessionKey(spark, dir, "embeddings", s"opq$k#packed")) {
+      import spark.implicits._
+      Pq.packFrom(indexedCodes(spark, dir, k),
+          opqCodebook(spark, dir, k).toDF("m", "c_id", "c_emb"))
         .select(col("vec_id"), unhex(col("code_packed")).as("codes"))
-        .localCheckpoint(true))
-  }
+        .localCheckpoint(true)
+    }
 
   /** Two-stage OPQ recall at the production width (`ann_opq_recall`):
     * ADC shortlist in the ROTATED space (rotated query subvectors

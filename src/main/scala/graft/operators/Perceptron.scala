@@ -114,41 +114,40 @@ object Perceptron {
       .orderBy("doc_id")
   }
 
-  /** Per-dataset memo of the trained weight vector — the
-    * [[Similarity]]/[[Pq]] train-once-serve-many discipline (training
-    * is deterministic: fixed epoch count, exact integer updates, so
-    * the artifact is a pure function of the dataset version).
+  /** Memo key of the trained weight vector, shared by the trainer and
+    * [[installWeights]]. Training is deterministic (fixed epoch count,
+    * exact integer updates), so the artifact is a pure function of the
+    * dataset version — the [[Similarity]]/[[Pq]] train-once-serve-many
+    * discipline.
     */
-  private val weightsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Long]]()
+  private def weightsKey(dir: String): String =
+    graft.DataVersion.key(dir, "documents", "perceptron")
 
   /** The trained weight vector alone (for specs / reuse on a stream —
     * weights ride any plan as literals like the IVF centroids do).
     */
   def trainedWeights(spark: SparkSession, dir: String): Array[Long] =
-    weightsCache.computeIfAbsent(
-      graft.DataVersion.key(dir, "documents", "perceptron"),
-      _ => train(features(spark, dir).localCheckpoint(true)))
+    graft.Memo(weightsKey(dir))(trainWeights(spark, dir))
 
-  /** Bench-only COLD classifier training (`text_quality_train`): the
-    * feature pass plus the full epoch loop with NO memo, weights
-    * emitted as (idx, weight) rows — keeps the training cost
-    * bench-visible (the memo plus Bench's min-of-2 warm passes
-    * otherwise discards it; `text_quality_classifier` reports the
-    * warm served scoring). The `ann_*_prod` precedent.
+  /** The un-memoized feature pass plus epoch loop [[trainedWeights]]
+    * serves from the memo (the bench-only cold row `text_quality_train`
+    * calls it directly, rendered through [[weightRows]]).
     */
-  def trainBuild(spark: SparkSession, dir: String): DataFrame = {
+  private[graft] def trainWeights(spark: SparkSession, dir: String): Array[Long] =
+    train(features(spark, dir).localCheckpoint(true))
+
+  /** A weight vector as (idx, weight) rows. */
+  private[graft] def weightRows(spark: SparkSession, w: Array[Long]): DataFrame = {
     import spark.implicits._
-    val w = train(features(spark, dir).localCheckpoint(true))
     w.zipWithIndex.map { case (v, i) => (i.toLong, v) }
       .toSeq.toDF("idx", "weight").orderBy("idx")
   }
 
   /** Install a [[graft.ModelStore]]-reloaded weight vector into the
-    * serving slot (same DataVersion key the trainer memoizes under).
+    * serving slot.
     */
   private[graft] def installWeights(dir: String, w: Array[Long]): Unit =
-    weightsCache.put(graft.DataVersion.key(dir, "documents", "perceptron"), w)
+    graft.Memo.install(weightsKey(dir), w)
 
   /** Score a STREAM of documents with batch-trained weights — the
     * train-batch/serve-stream half of the classifier (same pattern as

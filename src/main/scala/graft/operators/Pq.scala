@@ -271,28 +271,28 @@ object Pq {
       .select(col("vec_id"), col("m"), col("code")), cbDf)
   }
 
-  private val codebookCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(Int, Long, Seq[Double])]]()
+  /** Memo key of the trained codebook at width `k`, shared by the
+    * trainer and [[installCodebook]].
+    */
+  private def codebookKey(dir: String, k: Int): String =
+    graft.DataVersion.key(dir, "embeddings", s"pq$k")
 
   /** The trained codebook as a driver-side model artifact:
     * (subspace, centroid id, centroid) — O(K·d) doubles, memoized per
-    * (dataset dir content version, K) via [[graft.DataVersion.key]] so
-    * a regenerated dataset retrains instead of serving a stale model.
+    * (dataset dir content version, K) so a regenerated dataset
+    * retrains instead of serving a stale model.
     */
   def trainedCodebook(spark: SparkSession, dir: String,
       k: Int = codebookSize): Seq[(Int, Long, Seq[Double])] =
-    codebookCache.computeIfAbsent(
-      graft.DataVersion.key(dir, "embeddings", s"pq$k"),
-      _ => trainCodebook(spark, dir, k))
+    graft.Memo(codebookKey(dir, k))(trainCodebook(spark, dir, k))
 
   /** Install a [[graft.ModelStore]]-reloaded codebook into the serving
-    * slot (same DataVersion key the trainer memoizes under), so every
-    * PQ consumer at this K serves from the reloaded model.
+    * slot, so every PQ consumer at this K serves from the reloaded
+    * model.
     */
   private[graft] def installCodebook(dir: String, k: Int,
       model: Seq[(Int, Long, Seq[Double])]): Unit =
-    codebookCache.put(graft.DataVersion.key(dir, "embeddings", s"pq$k"),
-      model)
+    graft.Memo.install(codebookKey(dir, k), model)
 
   private def trainCodebook(spark: SparkSession, dir: String,
       k: Int): Seq[(Int, Long, Seq[Double])] =
@@ -388,43 +388,27 @@ object Pq {
       .select(col("vec_id"), col("m"), col("code")), cb)
   }
 
-  /** Session-scoped stored-index memos. A deployment encodes the
-    * corpus ONCE at index-build time and serves every query against
-    * the stored code table — so the ADC bench rows measure the QUERY
-    * path (scan + shortlist merge), not a per-query re-encode. Unlike
-    * the codebook artifact these stay DISTRIBUTED (eager
-    * localCheckpoint pins executor-side blocks); nothing is collected.
-    * Keyed by [[graft.DataVersion.sessionKey]] — session identity
-    * (checkpointed DataFrames strongly reference their session, so
-    * the previous weak session key never actually collected) + dir +
-    * content fingerprint, so regenerated source data gets a fresh
-    * index instead of a stale one.
-    */
-  private val indexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
   /** The stored (vec_id, m, code) index the join-form ADC scans —
     * built once per session with the production [[encodeScalar]] pass.
+    * A deployment encodes the corpus ONCE at index-build time and
+    * serves every query against the stored code table, so the ADC
+    * bench rows measure the QUERY path (scan + shortlist merge), not a
+    * per-query re-encode. Unlike the codebook artifact the stored
+    * indexes stay DISTRIBUTED (eager localCheckpoint pins
+    * executor-side blocks); nothing is collected.
     */
   private def indexedCodes(spark: SparkSession, dir: String, k: Int): DataFrame =
-    indexCache.computeIfAbsent(
-      graft.DataVersion.sessionKey(spark, dir, "embeddings", s"$k#codes"), _ =>
-        encodeScalar(Tables(spark, dir, "embeddings"),
-            trainedCodebook(spark, dir, k))
-          .select(col("vec_id"), col("m"), col("code"))
-          .localCheckpoint(true))
+    graft.Memo(graft.DataVersion.sessionKey(spark, dir, "embeddings", s"$k#codes"))(
+      encodeScalar(Tables(spark, dir, "embeddings"), trainedCodebook(spark, dir, k))
+        .select(col("vec_id"), col("m"), col("code"))
+        .localCheckpoint(true))
 
   /** The stored byte-packed index the packed-LUT scan reads. */
-  private def indexedPacked(spark: SparkSession, dir: String, k: Int): DataFrame = {
-    // resolve the codes index BEFORE entering computeIfAbsent: a nested
-    // computeIfAbsent on the same map is a recursive update CHM forbids
-    val codes = indexedCodes(spark, dir, k)
-    indexCache.computeIfAbsent(
-      graft.DataVersion.sessionKey(spark, dir, "embeddings", s"$k#packed"), _ =>
-        packFrom(codes, codebookDf(spark, dir, k))
-          .select(col("vec_id"), unhex(col("code_packed")).as("codes"))
-          .localCheckpoint(true))
-  }
+  private def indexedPacked(spark: SparkSession, dir: String, k: Int): DataFrame =
+    graft.Memo(graft.DataVersion.sessionKey(spark, dir, "embeddings", s"$k#packed"))(
+      packFrom(indexedCodes(spark, dir, k), codebookDf(spark, dir, k))
+        .select(col("vec_id"), unhex(col("code_packed")).as("codes"))
+        .localCheckpoint(true))
 
   /** Two-stage recall at an explicit codebook width — certifies the
     * accuracy gain of the production K over the default (same sample,

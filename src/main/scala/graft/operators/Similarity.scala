@@ -369,17 +369,17 @@ object Similarity {
     * learned partitions, and each probed cell holds ~√N vectors so
     * per-query work stays O(nprobe·√N) as the corpus grows.
     */
-  /** Per-dataset memo of the trained centroid artifact. Training is
-    * deterministic (fixed seed rule, ordered folds), so the artifact
-    * is a pure function of the dataset directory — real deployments
-    * train the index ONCE and serve it, and the memo gives the same
-    * shape: the first IVF query on a dataset pays for training, later
-    * ones (other probe settings, recall audits, streams) reuse the
-    * O(k·dims) driver-side model. Plain driver data — no session-bound
-    * state, safe across SparkSessions.
+  /** Memo key of the trained centroid artifact, shared by the trainer
+    * and [[installCentroids]]. Training is deterministic (fixed seed
+    * rule, ordered folds), so the artifact is a pure function of the
+    * dataset version — real deployments train the index ONCE and serve
+    * it: the first IVF query on a dataset pays for training, later ones
+    * (other probe settings, recall audits, streams) reuse the
+    * O(k·dims) driver-side model. Plain driver data, safe across
+    * SparkSessions.
     */
-  private val centroidCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(Long, Seq[Double])]]()
+  private def centroidsKey(dir: String): String =
+    graft.DataVersion.key(dir, "embeddings", "ivf")
 
   /** The trained k-means centroids as a driver-side model artifact
     * (O(k·dims)) — what [[ivfTopK]] indexes with, and what
@@ -387,17 +387,15 @@ object Similarity {
     * [[ivfTopK]] for the training discipline.
     */
   def trainedCentroids(spark: SparkSession, dir: String): Seq[(Long, Seq[Double])] =
-    centroidCache.computeIfAbsent(
-      graft.DataVersion.key(dir, "embeddings", "ivf"),
-      _ => trainCentroids(spark, dir))
+    graft.Memo(centroidsKey(dir))(trainCentroids(spark, dir))
 
   /** Install a [[graft.ModelStore]]-reloaded centroid artifact into
-    * the serving slot (same DataVersion key the trainer memoizes
-    * under), so every IVF consumer serves from the reloaded model.
+    * the serving slot, so every IVF consumer serves from the reloaded
+    * model.
     */
   private[graft] def installCentroids(dir: String,
       model: Seq[(Long, Seq[Double])]): Unit =
-    centroidCache.put(graft.DataVersion.key(dir, "embeddings", "ivf"), model)
+    graft.Memo.install(centroidsKey(dir), model)
 
   private def trainCentroids(spark: SparkSession, dir: String,
       means: DataFrame => DataFrame = cellMeans): Seq[(Long, Seq[Double])] = {

@@ -304,37 +304,15 @@ object TextAnalysis {
     *
     * Scale shape: fingerprint table is ~2/(w+1) of corpus chars, the
     * join is equi on fingerprint value with df-bounded buckets — never
-    * all-pairs.
+    * all-pairs. Memoized per session and data version: the pairs row
+    * and the duplication-graph PageRank both consume it, and the
+    * fingerprint front-end costs ~1.5 s at sf0.1.
     */
   def winnowPassagePairs(spark: SparkSession, dir: String): DataFrame =
-    winnowCache.computeIfAbsent(
-      graft.DataVersion.sessionKey(spark, dir, "documents", "winnow"),
-      _ => computeWinnowPairs(spark, dir).localCheckpoint())
+    graft.Memo(graft.DataVersion.sessionKey(spark, dir, "documents", "winnow"))(
+      computeWinnowPairs(spark, dir).localCheckpoint())
 
-  /** Memo of the materialized pairs table — the fingerprint front-end
-    * costs ~1.5 s at sf0.1 and BOTH the pairs row and the
-    * duplication-graph PageRank consume it (the derived-table analog
-    * of the IVF/PQ/BPE model-artifact caches). Keyed by
-    * [[graft.DataVersion.sessionKey]]: session identity + dir +
-    * content fingerprint, so regenerated testdata can never serve
-    * stale pairs; entries honestly live for the (short-lived) JVM —
-    * see DataVersion's scaladoc for why a weak session key would be a
-    * fiction here.
-    */
-  private val winnowCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
-  /** Bench-only COLD build of the winnowed passage-pair table
-    * (`text_winnow_build`): [[computeWinnowPairs]] straight through,
-    * NEVER [[winnowCache]] — keeps the fingerprint front-end + pair
-    * join bench-visible (the memo plus Bench's min-of-2 warm passes
-    * otherwise discards it; `text_winnow_pairs` reports the warm
-    * read-off). The `ann_*_prod` precedent.
-    */
-  def winnowPairsBuild(spark: SparkSession, dir: String): DataFrame =
-    computeWinnowPairs(spark, dir)
-
-  private def computeWinnowPairs(spark: SparkSession, dir: String): DataFrame = {
+  private[graft] def computeWinnowPairs(spark: SparkSession, dir: String): DataFrame = {
     val sel = Tables(spark, dir, "documents")
       .filter(length(col("text")) >= winnowK)
       .select(col("doc_id"),

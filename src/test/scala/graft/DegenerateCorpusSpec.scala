@@ -75,7 +75,8 @@ class DegenerateCorpusSpec extends SparkSpec {
     "split_kl" -> Sampling.splitKlDrift(spark, dir).count(),
     "edit_verify" -> Dedup.editDistancePairs(spark, dir).count(),
     "containment" -> Dedup.containmentPairs(spark, dir).count(),
-    "opq_rotation" -> graft.operators.Opq.rotationRows(spark, dir).count(),
+    "opq_rotation" -> graft.operators.Opq.rotationRows(spark,
+      graft.operators.Opq.trainedRotation(spark, dir)).count(),
     "mrl_topk" -> graft.operators.Quantize.mrlTopK(spark, dir).count(),
     "mrl_overlap" -> graft.operators.Quantize.mrlOverlap(spark, dir).count(),
     "dim_variance" -> graft.operators.Quantize.dimVariance(spark, dir).count(),

@@ -117,7 +117,7 @@ class OpqSpec extends SparkSpec {
   }
 
   test("rotation rows: full surface, allocation is a bijection") {
-    val rows = Opq.rotationRows(spark, sf).collect()
+    val rows = Opq.rotationRows(spark, Opq.trainedRotation(spark, sf)).collect()
     assert(rows.length === 64 * 64)
     val rot = Opq.trainedRotation(spark, sf)
     assert(rot.outDimOfRound.toSet.size === 64, "out_dim allocation must be a bijection")
