@@ -19,11 +19,15 @@ object ChangeLog {
     * (`key/value.converter.schemas.enable=false`,
     * `/root/reference/connectors/debezium_configuration.json:28,47`)
     * with the explicit envelope schema — never inferred.
+    *
+    * The envelope comes out of a one-row `inline` rather than a
+    * `select("e.*")` projection: the optimizer pushes a filter on an
+    * envelope field (the MV's op filter) below a projection, where it
+    * would parse every message a second time, but not below a generator.
     */
   def fromJsonValues(raw: DataFrame, valueCol: String = "value"): DataFrame =
-    raw.select(from_json(col(valueCol).cast("string"),
-        ChangeEvent.envelopeSchema).as("e"))
-      .select("e.*")
+    raw.select(inline(array(
+      from_json(col(valueCol).cast("string"), ChangeEvent.envelopeSchema))))
 
   /** Serialize envelope rows back to JSON wire form (`JsonConverter`,
     * `debezium_configuration.json:14,47`).

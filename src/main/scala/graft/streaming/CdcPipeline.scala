@@ -16,11 +16,16 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * Streaming gives the same incremental contract: each micro-batch runs
   * [[MvTransform]] over new rows only and appends to the bookings log.
   *
-  * Delivery: the checkpointed file sink is exactly-once, strictly
-  * stronger than the reference's at-least-once
-  * (`clickhouse_sink_configuration.json:13`); the versioned argmax in
-  * [[graft.operators.VersionedUpsert.finalView]] keeps results correct
-  * even under replays, so either guarantee yields the same table.
+  * Delivery: at-least-once, the same as the reference's sink
+  * (`clickhouse_sink_configuration.json:13`). The sink is a
+  * `foreachBatch` append, so a micro-batch replayed after a crash
+  * between its append and its commit-log entry is appended again, and
+  * a fresh checkpoint re-appends every change file. The versioned
+  * argmax in [[graft.operators.VersionedUpsert.finalView]] (FINAL)
+  * collapses those duplicates, so the table read is the same.
+  *
+  * Every query here starts through [[startBatches]], which installs
+  * [[LocalCheckpointFileManager]] on the session.
   */
 object CdcPipeline {
 
@@ -49,18 +54,14 @@ object CdcPipeline {
       case None =>
         writeTo(MvTransform(envelope), bookingsDir, checkpointDir, trigger)
       case Some(dl) =>
-        envelope.writeStream
-          .option("checkpointLocation", checkpointDir)
-          .trigger(trigger)
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            batch.persist() // two sinks read the same micro-batch once
-            try {
-              MvTransform(batch).write.mode("append").parquet(bookingsDir)
-              MvTransform.droppedEnvelopes(batch)
-                .write.mode("append").parquet(dl)
-            } finally batch.unpersist()
-          }
-          .start()
+        startBatches(envelope, checkpointDir, trigger) { batch =>
+          batch.persist() // two sinks read the same micro-batch once
+          try {
+            MvTransform(batch).write.mode("append").parquet(bookingsDir)
+            MvTransform.droppedEnvelopes(batch)
+              .write.mode("append").parquet(dl)
+          } finally batch.unpersist()
+        }
     }
   }
 
@@ -93,13 +94,24 @@ object CdcPipeline {
       bookingsDir: String,
       checkpointDir: String,
       trigger: Trigger): StreamingQuery =
-    upserts.writeStream
+    startBatches(upserts, checkpointDir, trigger)(
+      _.write.mode("append").parquet(bookingsDir))
+
+  /** Start `stream` as a checkpointed `foreachBatch` query running
+    * `sink` on each micro-batch. Every graft query start goes through
+    * here, so each one installs [[LocalCheckpointFileManager]] first.
+    */
+  def startBatches(
+      stream: DataFrame,
+      checkpointDir: String,
+      trigger: Trigger)(sink: DataFrame => Unit): StreamingQuery = {
+    LocalCheckpointFileManager.install(stream.sparkSession)
+    stream.writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.write.mode("append").parquet(bookingsDir)
-      }
+      .foreachBatch { (batch: DataFrame, _: Long) => sink(batch) }
       .start()
+  }
 
   /** Drain all currently-available input synchronously (test helper). */
   def runOnce(

@@ -354,108 +354,105 @@ object SchemaEvolution {
     var adds = loadJournal(schemaDir)
     var renames = loadRenameJournal(schemaDir)
     var widens = loadWidenJournal(schemaDir)
-    spark.readStream.text(changesDir).writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.persist()
-        try {
-          val probed = batch.select(col("value"),
-            from_json(col("value"), probe).as("p"))
-          // control plane: tiny by construction (one row per DDL)
-          val ddls = probed.filter(col("p.ddl").isNotNull)
-            .select("p.ddl").collect().map(_.getString(0)).toSeq
-          val newAdds = ddls.flatMap(parseAdds)
-            .filterNot(a => adds.exists(_.column == a.column))
-          appendJournal(schemaDir, newAdds)
-          adds = adds ++ newAdds
-          // rename applicability, in arrival order against the image
-          // as evolved SO FAR: source must resolve and not be a base
-          // projection column; target must be fresh. A re-delivered
-          // rename is recognized (idempotent), not re-applied.
-          var afterCols = baseAfterFields ++ adds.map(_.column) ++
-            renames.map(_.to)
-          val newRenames = ddls.flatMap(parseRenames).flatMap { r =>
-            if (renames.contains(r)) None // at-least-once re-delivery
-            else if (!baseAfterFields.contains(r.from) &&
-              afterCols.contains(r.from) && !afterCols.contains(r.to)) {
-              afterCols += r.to
-              Some(r)
-            } else None
-          }
-          appendRenameJournal(schemaDir, newRenames)
-          renames = renames ++ newRenames
-          // widen applicability, against the image as evolved so far:
-          // the column must be an EVOLVED one (adds/renames own their
-          // types; the compiled MV projection owns the base columns —
-          // base-column type changes dead-letter), and the current
-          // wire type → target must sit on the safe widening lattice.
-          // A re-delivered widen is recognized, not re-journaled.
-          val newWidens = ddls.flatMap(parseWidens).flatMap { wd =>
-            if (widens.contains(wd)) None // at-least-once re-delivery
-            else {
-              val curImg = evolveWidens(evolveRenames(
-                evolveEnvelope(ChangeEvent.envelopeSchema, adds), renames),
-                widens, renames)("after").dataType.asInstanceOf[StructType]
-              curImg.fields.find(_.name == wd.column) match {
-                case Some(f) if !baseAfterFields.contains(wd.column) &&
-                  isWiden(f.dataType, wd.to) => Some(wd)
-                case _ => None // narrowing/base/unknown → dead-letter
-              }
+    CdcPipeline.startBatches(spark.readStream.text(changesDir), checkpointDir,
+        trigger) { batch =>
+      batch.persist()
+      try {
+        val probed = batch.select(col("value"),
+          from_json(col("value"), probe).as("p"))
+        // control plane: tiny by construction (one row per DDL)
+        val ddls = probed.filter(col("p.ddl").isNotNull)
+          .select("p.ddl").collect().map(_.getString(0)).toSeq
+        val newAdds = ddls.flatMap(parseAdds)
+          .filterNot(a => adds.exists(_.column == a.column))
+        appendJournal(schemaDir, newAdds)
+        adds = adds ++ newAdds
+        // rename applicability, in arrival order against the image
+        // as evolved SO FAR: source must resolve and not be a base
+        // projection column; target must be fresh. A re-delivered
+        // rename is recognized (idempotent), not re-applied.
+        var afterCols = baseAfterFields ++ adds.map(_.column) ++
+          renames.map(_.to)
+        val newRenames = ddls.flatMap(parseRenames).flatMap { r =>
+          if (renames.contains(r)) None // at-least-once re-delivery
+          else if (!baseAfterFields.contains(r.from) &&
+            afterCols.contains(r.from) && !afterCols.contains(r.to)) {
+            afterCols += r.to
+            Some(r)
+          } else None
+        }
+        appendRenameJournal(schemaDir, newRenames)
+        renames = renames ++ newRenames
+        // widen applicability, against the image as evolved so far:
+        // the column must be an EVOLVED one (adds/renames own their
+        // types; the compiled MV projection owns the base columns —
+        // base-column type changes dead-letter), and the current
+        // wire type → target must sit on the safe widening lattice.
+        // A re-delivered widen is recognized, not re-journaled.
+        val newWidens = ddls.flatMap(parseWidens).flatMap { wd =>
+          if (widens.contains(wd)) None // at-least-once re-delivery
+          else {
+            val curImg = evolveWidens(evolveRenames(
+              evolveEnvelope(ChangeEvent.envelopeSchema, adds), renames),
+              widens, renames)("after").dataType.asInstanceOf[StructType]
+            curImg.fields.find(_.name == wd.column) match {
+              case Some(f) if !baseAfterFields.contains(wd.column) &&
+                isWiden(f.dataType, wd.to) => Some(wd)
+              case _ => None // narrowing/base/unknown → dead-letter
             }
           }
-          appendWidenJournal(schemaDir, newWidens)
-          widens = widens ++ newWidens
-          val schema = evolveWidens(evolveRenames(
-            evolveEnvelope(ChangeEvent.envelopeSchema, adds), renames),
-            widens, renames)
-          val data = probed.filter(col("p.ddl").isNull)
-            .select(from_json(col("value"), schema).as("e"),
-              col("value"))
-          applyEvolved(data.select("e.*"))
-            .write.mode("append").parquet(bookingsDir)
-          deadLetterDir.foreach { dl =>
-            // unapplied DDL (drops, table renames, base-column or
-            // unresolvable renames, narrowing type changes) +
-            // heartbeats/unknown ops, raw wire form. A DDL is applied
-            // iff it yielded an add or a journaled rename/widen
-            // (re-deliveries count).
-            val appliedDdl = (ddls.filter(d => parseAdds(d).nonEmpty) ++
-              ddls.filter(d => parseRenames(d).exists(renames.contains)) ++
-              ddls.filter(d => parseWidens(d).exists(widens.contains)))
-              .toSet
-            val nonApplied =
-              if (appliedDdl.isEmpty) probed.filter(col("p.ddl").isNotNull)
-              else probed.filter(col("p.ddl").isNotNull &&
-                !col("p.ddl").isInCollection(appliedDdl))
-            // LOSSY data rows: an after-image carrying wire fields the
-            // evolved schema does not know (e.g. rows arriving under a
-            // REJECTED rename's new name) would otherwise lose those
-            // values silently — the row still lands in the log (its
-            // known fields parse fine; diverting it would lose MORE),
-            // but a raw copy goes to the dead letter so the loss is
-            // observable per row, not just inferable from a rejected
-            // DDL. The extra map-parse runs only when a dead letter is
-            // configured.
-            val knownAfter = schema("after").dataType
-              .asInstanceOf[StructType].fieldNames
-            val lossy = data
-              .withColumn("__m", from_json(get_json_object(col("value"),
-                "$.after"), MapType(StringType, StringType)))
-              .filter(col("__m").isNotNull &&
-                size(map_keys(col("__m"))) >
-                  size(array_intersect(map_keys(col("__m")),
-                    typedLit(knownAfter.toSeq))))
-              .select(col("value"))
-            MvTransform.droppedEnvelopes(data.select("e.*"))
-              .select(to_json(struct(col("*"))).as("value"))
-              .unionByName(nonApplied.select("value"))
-              .unionByName(lossy)
-              .write.mode("append").text(dl)
-          }
-        } finally batch.unpersist()
-      }
-      .start()
+        }
+        appendWidenJournal(schemaDir, newWidens)
+        widens = widens ++ newWidens
+        val schema = evolveWidens(evolveRenames(
+          evolveEnvelope(ChangeEvent.envelopeSchema, adds), renames),
+          widens, renames)
+        val data = probed.filter(col("p.ddl").isNull)
+          .select(from_json(col("value"), schema).as("e"),
+            col("value"))
+        applyEvolved(data.select("e.*"))
+          .write.mode("append").parquet(bookingsDir)
+        deadLetterDir.foreach { dl =>
+          // unapplied DDL (drops, table renames, base-column or
+          // unresolvable renames, narrowing type changes) +
+          // heartbeats/unknown ops, raw wire form. A DDL is applied
+          // iff it yielded an add or a journaled rename/widen
+          // (re-deliveries count).
+          val appliedDdl = (ddls.filter(d => parseAdds(d).nonEmpty) ++
+            ddls.filter(d => parseRenames(d).exists(renames.contains)) ++
+            ddls.filter(d => parseWidens(d).exists(widens.contains)))
+            .toSet
+          val nonApplied =
+            if (appliedDdl.isEmpty) probed.filter(col("p.ddl").isNotNull)
+            else probed.filter(col("p.ddl").isNotNull &&
+              !col("p.ddl").isInCollection(appliedDdl))
+          // LOSSY data rows: an after-image carrying wire fields the
+          // evolved schema does not know (e.g. rows arriving under a
+          // REJECTED rename's new name) would otherwise lose those
+          // values silently — the row still lands in the log (its
+          // known fields parse fine; diverting it would lose MORE),
+          // but a raw copy goes to the dead letter so the loss is
+          // observable per row, not just inferable from a rejected
+          // DDL. The extra map-parse runs only when a dead letter is
+          // configured.
+          val knownAfter = schema("after").dataType
+            .asInstanceOf[StructType].fieldNames
+          val lossy = data
+            .withColumn("__m", from_json(get_json_object(col("value"),
+              "$.after"), MapType(StringType, StringType)))
+            .filter(col("__m").isNotNull &&
+              size(map_keys(col("__m"))) >
+                size(array_intersect(map_keys(col("__m")),
+                  typedLit(knownAfter.toSeq))))
+            .select(col("value"))
+          MvTransform.droppedEnvelopes(data.select("e.*"))
+            .select(to_json(struct(col("*"))).as("value"))
+            .unionByName(nonApplied.select("value"))
+            .unionByName(lossy)
+            .write.mode("append").text(dl)
+        }
+      } finally batch.unpersist()
+    }
   }
 
   /** FINAL read over an evolved log: schema union across files, so

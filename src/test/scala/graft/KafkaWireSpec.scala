@@ -2,6 +2,7 @@ package graft
 
 import graft.operators.{MvTransform, VersionedUpsert}
 import graft.sources.ChangeLog
+import org.apache.spark.sql.catalyst.expressions.JsonToStructs
 import org.apache.spark.sql.functions._
 
 /** Wire-shape contract for the Kafka production path (S1/S3/S5's last
@@ -71,6 +72,20 @@ class KafkaWireSpec extends SparkSpec {
     // heartbeat (op=m) + torn JSON (all-null parse) = 2 dead letters
     assert(dropped.count() === 2L)
     assert(MvTransform(env).count() === 32L)
+  }
+
+  test("the envelope is parsed once: the op filter does not add a " +
+    "second from_json below the parse") {
+    // a file scan, not the in-memory frame, so the optimizer cannot fold
+    // the whole plan into a local relation
+    val dir = java.nio.file.Files.createTempDirectory("graft-wire")
+    java.nio.file.Files.write(dir.resolve("wire.jsonl"),
+      fixture.mkString("\n").getBytes("UTF-8"))
+    val mv = MvTransform(ChangeLog.fromJsonValues(spark.read.text(dir.toString)))
+    val parses = mv.queryExecution.optimizedPlan.flatMap(_.expressions)
+      .flatMap(_.collect { case j: JsonToStructs => j })
+    assert(parses.size === 1, mv.queryExecution.optimizedPlan.toString)
+    assert(mv.count() === 32L)
   }
 
   test("router rewrites the fixture topic the reference's regex way") {
