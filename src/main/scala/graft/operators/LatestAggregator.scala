@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.operators.VersionedUpsert.newer
 import graft.schema.ChangeEvent.Booking
 import org.apache.spark.sql.{Dataset, Encoder, Encoders}
 import org.apache.spark.sql.expressions.Aggregator
@@ -21,9 +22,6 @@ object LatestAggregator extends Aggregator[Booking, Booking, Booking] {
   /** Sentinel: version below any real LSN (real versions are >= 1). */
   override def zero: Booking =
     Booking(null, null, 0, is_canceled = false, null, null, Long.MinValue)
-
-  private def newer(a: Booking, b: Booking): Boolean =
-    VersionedUpsert.newer(a, b)
 
   override def reduce(buf: Booking, row: Booking): Booking =
     if (newer(row, buf)) row else buf

@@ -1,7 +1,9 @@
 package graft.operators
 
+import graft.schema.ChangeEvent
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** The incremental materialized-view transform: change-event envelope →
   * upsert-table rows.
@@ -45,23 +47,36 @@ object MvTransform {
   def droppedEnvelopes(changes: DataFrame): DataFrame =
     changes.filter(!coalesce(col("op").isin(dataOps: _*), lit(false)))
 
+  /** The base row image's field names: the columns this projection
+    * owns, which schema evolution must leave alone.
+    */
+  private[graft] val baseImageFields: Set[String] =
+    ChangeEvent.envelopeSchema("after").dataType.asInstanceOf[StructType]
+      .fieldNames.toSet
+
   /** Envelope rows (nested form, [[graft.schema.ChangeEvent.envelopeSchema]])
-    * → upsert rows (Booking shape).
+    * → upsert rows (Booking shape). An envelope evolved by
+    * [[graft.streaming.SchemaEvolution]] carries image fields beyond
+    * the base image; each follows the Booking columns, picked the same
+    * delete-aware way, at its wire type. On the base envelope there are
+    * none.
     */
   def apply(changes: DataFrame): DataFrame = {
     val isDelete = col("op") === "d"
     def pick(field: String) =
       when(isDelete, col(s"before.$field")).otherwise(col(s"after.$field"))
+    val extras = changes.schema("after").dataType.asInstanceOf[StructType]
+      .fieldNames.toSeq.filterNot(baseImageFields).map(f => pick(f).as(f))
 
     changes
       .filter(col("op").isin(dataOps: _*))
-      .select(
+      .select(Seq(
         pick("booking_id").as("booking_id"),
         pick("status").as("status"),
         when(isDelete, lit(1)).otherwise(lit(0)).as("is_deleted"),
         pick("is_canceled").as("is_canceled"),
         timestamp_micros(pick("created_at")).as("created_at"),
         timestamp_micros(pick("modified_at")).as("modified_at"),
-        col("source.lsn").as("version"))
+        col("source.lsn").as("version")) ++ extras: _*)
   }
 }

@@ -11,7 +11,7 @@ import org.apache.spark.sql.types._
   * (`/root/reference/connectors/debezium_configuration.json:48-49`); here
   * we keep the *nested* struct form as the canonical shape — idiomatic
   * for Spark, where struct field access (`col("before.booking_id")`) is
-  * free — and provide [[graft.sources.Flattening]] for the dotted form.
+  * free — and provide [[graft.sources.ChangeLog.flatten]] for the dotted form.
   *
   * Timestamps inside `before`/`after` are epoch-MICROSECOND Int64, as
   * Debezium emits PG `TIMESTAMP` columns

@@ -24,10 +24,13 @@ object ChangeLog {
     * `select("e.*")` projection: the optimizer pushes a filter on an
     * envelope field (the MV's op filter) below a projection, where it
     * would parse every message a second time, but not below a generator.
+    * `schema` is the base envelope unless a schema-evolving reader
+    * ([[graft.streaming.SchemaEvolution]]) passes its evolved one.
     */
-  def fromJsonValues(raw: DataFrame, valueCol: String = "value"): DataFrame =
-    raw.select(inline(array(
-      from_json(col(valueCol).cast("string"), ChangeEvent.envelopeSchema))))
+  def fromJsonValues(raw: DataFrame, valueCol: String = "value",
+                     schema: StructType = ChangeEvent.envelopeSchema)
+      : DataFrame =
+    raw.select(inline(array(from_json(col(valueCol).cast("string"), schema))))
 
   /** Serialize envelope rows back to JSON wire form (`JsonConverter`,
     * `debezium_configuration.json:14,47`).

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.operators.VersionedUpsert.newer
 import graft.schema.ChangeEvent.Booking
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
@@ -29,12 +30,6 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * cardinality, not event volume, bounds memory.
   */
 object StatefulUpsert {
-
-  /** The shared typed total order (is `a` strictly newer than `b`?) —
-    * see [[graft.operators.VersionedUpsert.newer]].
-    */
-  private[streaming] def newer(a: Booking, b: Booking): Boolean =
-    graft.operators.VersionedUpsert.newer(a, b)
 
   /** Streaming FINAL: one state entry per booking_id holding the
     * current argmax row; each micro-batch emits the (possibly updated)

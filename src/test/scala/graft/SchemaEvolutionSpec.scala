@@ -4,8 +4,15 @@ import graft.operators.VersionedUpsert
 import graft.sources.{ChangeLog, WorkloadFixture}
 import graft.streaming.SchemaEvolution
 import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.catalyst.expressions.JsonToStructs
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.sql.util.QueryExecutionListener
+import org.scalatest.concurrent.Eventually._
+import org.scalatest.time.SpanSugar._
 
 /** T7 additive schema evolution: an `ALTER TABLE … ADD COLUMN` DDL
   * envelope arriving mid-stream widens the parse schema, later data
@@ -329,5 +336,121 @@ class SchemaEvolutionSpec extends SparkSpec {
     val dl9 = spark.read.text(deadLetter)
     assert(dl9.filter(col("value").contains("\"state\":\"Weird\""))
       .count() === 1L, "the loss must leave a per-row dead-letter trace")
+  }
+
+  private def update(lsn: Long, after: String) =
+    s"""{"before":null,"after":$after,"source":{"sequence":""" +
+      s""""[\\"0\\",\\"$lsn\\"]","lsn":$lsn},"op":"u","ts_ms":$lsn}"""
+
+  private def image(id: Int, bid: String, extra: String) =
+    s"""{"id":$id,"booking_id":"$bid","status":"Open","is_deleted":0,""" +
+      s""""is_canceled":false,"created_at":1704067200000000,""" +
+      s""""modified_at":1704067200000000,$extra}"""
+
+  private def ddl(stmt: String) = s"""{"ddl":"$stmt","ts_ms":1}"""
+
+  private def read(p: java.nio.file.Path) =
+    new String(Files.readAllBytes(p), "UTF-8")
+
+  test("DDL re-delivered within one micro-batch is journaled once") {
+    val root = Files.createTempDirectory("graft-evolve-dup").toString
+    val changes = Paths.get(root, "changes")
+    Files.createDirectories(changes)
+    val add = ddl("ALTER TABLE public.bookings ADD COLUMN priority integer")
+    val widen =
+      ddl("ALTER TABLE public.bookings ALTER COLUMN priority TYPE bigint")
+    // one file = one micro-batch, each statement delivered twice
+    Files.write(changes.resolve("wave1.txt"), Seq(add, add, widen, widen,
+      update(30001L, image(1, "b1", "\"priority\":9000000000")))
+      .mkString("\n").getBytes("UTF-8"))
+    SchemaEvolution.runOnce(spark, changes.toString, s"$root/bookings",
+      s"$root/ckpt", s"$root/schema", Some(s"$root/dl"))
+
+    assert(read(Paths.get(root, "schema", "adds.tsv")) ===
+      "public.bookings\tpriority\tINT\n")
+    assert(read(Paths.get(root, "schema", "widens.tsv")) ===
+      "public.bookings\tpriority\tBIGINT\n")
+    assert(spark.read.text(s"$root/dl")
+      .filter(col("value").contains("ddl")).count() === 0L)
+    val fv = VersionedUpsert.finalView(SchemaEvolution.readEvolvedLog(
+      spark, s"$root/bookings", s"$root/schema"))
+    assert(fv.select("priority").head().getLong(0) === 9000000000L)
+  }
+
+  test("a schema journal written in the committed format restarts unchanged") {
+    val root = Files.createTempDirectory("graft-evolve-compat").toString
+    val schemaDir = Paths.get(root, "schema")
+    Files.createDirectories(schemaDir)
+    val journal = Map(
+      "adds.tsv" -> ("public.bookings\tnote\tSTRING\n" +
+        "public.bookings\tpriority\tINT\n"),
+      "renames.tsv" -> "public.bookings\tnote\tvip_note\n",
+      "widens.tsv" -> "public.bookings\tpriority\tBIGINT\n")
+    journal.foreach { case (f, text) =>
+      Files.write(schemaDir.resolve(f), text.getBytes("UTF-8")) }
+
+    val logSchema = SchemaEvolution.evolvedLogSchema(spark, schemaDir.toString)
+    assert(logSchema.fieldNames.toSeq === Seq("booking_id", "status",
+      "is_deleted", "is_canceled", "created_at", "modified_at", "version",
+      "note", "priority", "vip_note"))
+    assert(logSchema("priority").dataType === LongType)
+    assert(logSchema("vip_note").dataType === StringType)
+    assert(SchemaEvolution.loadWidenJournal(schemaDir.toString) ===
+      Seq(SchemaEvolution.ColumnWiden("public.bookings", "priority", LongType)))
+
+    // a restarted writer parses the journaled columns without re-seeing
+    // any DDL, and appends nothing to the journal
+    val changes = Paths.get(root, "changes")
+    Files.createDirectories(changes)
+    Files.write(changes.resolve("wave1.txt"), update(40001L, image(1, "b1",
+      "\"vip_note\":\"gold\",\"priority\":9000000000")).getBytes("UTF-8"))
+    SchemaEvolution.runOnce(spark, changes.toString, s"$root/bookings",
+      s"$root/ckpt", schemaDir.toString, Some(s"$root/dl"))
+    journal.foreach { case (f, text) =>
+      assert(read(schemaDir.resolve(f)) === text, f) }
+    val fv = VersionedUpsert.finalView(SchemaEvolution.readEvolvedLog(
+      spark, s"$root/bookings", schemaDir.toString))
+    assert(!fv.columns.contains("note")) // the alias map still applies
+    val row = fv.select("booking_id", "vip_note", "priority").head()
+    assert((row.getString(0), row.getString(1), row.getLong(2)) ===
+      (("b1", "gold", 9000000000L)))
+  }
+
+  test("the evolving writer parses each data row's envelope once") {
+    val root = Files.createTempDirectory("graft-evolve-plan").toString
+    val changes = Paths.get(root, "changes")
+    Files.createDirectories(changes)
+    Files.write(changes.resolve("wave1.txt"), Seq(
+      ddl("ALTER TABLE public.bookings ADD COLUMN note text"),
+      update(50001L, image(1, "b1", "\"note\":\"vip\""))).mkString("\n")
+      .getBytes("UTF-8"))
+    // the data write runs inside foreachBatch; a listener registered
+    // before the start is cloned into the stream's session and sees it
+    val writes = new java.util.concurrent.ConcurrentLinkedQueue[LogicalPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution,
+                             durationNs: Long): Unit =
+        qe.optimizedPlan.foreach {
+          case w: InsertIntoHadoopFsRelationCommand
+              if w.outputPath.getName == "bookings" => writes.add(w.query)
+          case _ =>
+        }
+      override def onFailure(funcName: String, qe: QueryExecution,
+                             exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      SchemaEvolution.runOnce(spark, changes.toString, s"$root/bookings",
+        s"$root/ckpt", s"$root/schema")
+      eventually(timeout(30.seconds))(assert(!writes.isEmpty))
+    } finally spark.listenerManager.unregister(listener)
+    val plan = writes.peek()
+    val parses = plan.flatMap(_.expressions)
+      .flatMap(_.collect { case j: JsonToStructs => j })
+    // the DDL probe plus ONE envelope parse: the MV's op filter must not
+    // push a second parse below the envelope
+    assert(parses.size === 2, plan.toString)
+    assert(parses.count(_.schema.asInstanceOf[StructType]
+      .fieldNames.contains("after")) === 1, plan.toString)
   }
 }

@@ -24,7 +24,7 @@ move can otherwise absorb a real regression — the guard forces every
 big raise to carry its own fresh-JVM adjudication evidence. New
 queries (no predecessor) are exempt; lowering a floor always allowed.
 
-Host-variance separation (round-15/16 verdict items). Three layers,
+Host-variance separation (round-15/16 verdict items). Two layers,
 composable, because a 32-thread local bench has TWO distinct noise
 modes that no single sentinel can absorb (measured on the committed
 r15 capture pair: a uniform ~1.1-1.4x band PLUS uncorrelated per-row
@@ -43,9 +43,6 @@ spikes up to 2.8x on fp-heavy rows while the light sentinel read
    single calibration row to get unlucky), clamped to [1, 2]. Every
    comparison then works on time/h. Absorbs the uniform band; cannot
    absorb per-row spikes (that is what multiple captures are for).
- - `--sentinel [name]` (legacy, round-14): same normalization with h
-   read off ONE fixed row (default q_topk_orders). Kept for
-   back-compat; --median supersedes it. Mutually exclusive.
 
 Ratchet guard (round-16 ADVICE): when normalization is active, update
 mode commits the NORMALIZED time (t/h) as the new floor, matching the
@@ -86,7 +83,6 @@ import sys
 
 THRESHOLD = 1.5
 RAISE_CAP = 1.3
-DEFAULT_SENTINEL = "q_topk_orders"
 HOST_FACTOR_CAP = 2.0
 BUDGET = os.path.join(os.path.dirname(__file__), "..",
                       "src", "main", "resources", "bench_budget.tsv")
@@ -191,24 +187,15 @@ def reverified_queries(path):
     return names
 
 
-def host_factor(queries, budget, sentinel, median):
-    """Capture/floor host factor, clamped to [1, HOST_FACTOR_CAP]:
-    the median of all per-row ratios (--median) or one fixed row's
-    ratio (--sentinel)."""
-    if median:
-        ratios = [queries[n] / budget[n] for n in queries
-                  if n in budget and budget[n] > 0]
-        if not ratios:
-            raise SystemExit("--median: no overlapping rows between the "
-                             "capture and the committed budget")
-        h = statistics.median(ratios)
-    else:
-        if sentinel not in queries:
-            raise SystemExit(f"sentinel {sentinel!r} not in the capture")
-        if sentinel not in budget:
-            raise SystemExit(f"sentinel {sentinel!r} has no committed floor")
-        h = queries[sentinel] / budget[sentinel]
-    return max(1.0, min(h, HOST_FACTOR_CAP))
+def host_factor(queries, budget):
+    """Capture/floor host factor: the median of all per-row ratios,
+    clamped to [1, HOST_FACTOR_CAP]."""
+    ratios = [queries[n] / budget[n] for n in queries
+              if n in budget and budget[n] > 0]
+    if not ratios:
+        raise SystemExit("--median: no overlapping rows between the "
+                         "capture and the committed budget")
+    return max(1.0, min(statistics.median(ratios), HOST_FACTOR_CAP))
 
 
 def main(argv):
@@ -228,16 +215,6 @@ def main(argv):
         if j + 1 >= len(flags) or flags[j + 1].startswith("--"):
             raise SystemExit("--reverify requires a report path argument")
         reverify = flags[j + 1]
-    sentinel = None
-    if "--sentinel" in flags:
-        if median:
-            raise SystemExit("--sentinel and --median are mutually "
-                             "exclusive (median supersedes)")
-        j = flags.index("--sentinel")
-        sentinel = (flags[j + 1]
-                    if j + 1 < len(flags) and not flags[j + 1].startswith("--")
-                    else DEFAULT_SENTINEL)
-    normalizing = median or sentinel is not None
 
     history_tag = None
     if "--history-tag" in flags:
@@ -258,10 +235,10 @@ def main(argv):
                              "budgets are defined at sf0.1")
         old = load_budget(BUDGET)
         adjudicated = reverified_queries(reverify) if reverify else set()
-        h = host_factor(queries, old, sentinel, median) if normalizing else 1.0
-        if normalizing:
+        h = host_factor(queries, old) if median else 1.0
+        if median:
             print(f"host factor {h:.3f} "
-                  f"({'median of ' + str(len(queries)) + ' rows' if median else 'sentinel ' + sentinel})")
+                  f"(median of {len(queries)} rows)")
         unjustified = []
         for name in sorted(queries):
             if name in old and queries[name] / h > RAISE_CAP * old[name] \
@@ -269,7 +246,7 @@ def main(argv):
                 unjustified.append(
                     f"{name}: {queries[name]:.2f}s"
                     + (f" (/{h:.2f} host = {queries[name] / h:.2f}s)"
-                       if normalizing else "")
+                       if median else "")
                     + f" > {RAISE_CAP}x committed "
                     f"floor {old[name]:.2f}s with no isolated-reverify line"
                     + (f" in {reverify}" if reverify else
@@ -332,7 +309,7 @@ def main(argv):
             print(f"appended {len(queries)} floors to {HISTORY} "
                   f"as {history_tag}")
         print(f"recorded {len(queries)} budgets to {BUDGET}"
-              + (f" (normalized /{h:.3f})" if normalizing and h > 1 else ""))
+              + (f" (normalized /{h:.3f})" if median and h > 1 else ""))
         return 0
     budget = load_budget(BUDGET)
     # a crash in EVERY capture always fails; a crash in SOME captures
@@ -353,10 +330,10 @@ def main(argv):
                 "re-run isolated and pass the adjudication via --reverify "
                 "to clear a transient host failure)")
     if sfs and sfs[0].endswith("sf0.1"):
-        h = host_factor(queries, budget, sentinel, median) if normalizing else 1.0
-        if normalizing:
+        h = host_factor(queries, budget) if median else 1.0
+        if median:
             print(f"host factor {h:.3f} "
-                  f"({'median of ' + str(len(queries)) + ' rows' if median else 'sentinel ' + sentinel})")
+                  f"(median of {len(queries)} rows)")
         if len(captures) > 1:
             print(f"gating on per-query min over {len(captures)} captures")
         for name in sorted(set(queries) | set(budget)):
@@ -373,7 +350,7 @@ def main(argv):
                 failures.append(
                     f"{name}: {queries[name]:.2f}s"
                     + (f" (/{h:.2f} host = {queries[name] / h:.2f}s)"
-                       if normalizing else "")
+                       if median else "")
                     + f" > {THRESHOLD}x budget {budget[name]:.2f}s")
         # resource gate: NO host normalization (bytes are plan-shape
         # facts, not host noise); generous multiple + absolute slack

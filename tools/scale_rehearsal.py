@@ -21,7 +21,8 @@ NEW row of the round plus the top floors, per the standing mandate.
 
 Environment: SPARK_GRAFT_BASE (default /root/testdata/sf0.1),
 SPARK_GRAFT_X10 (default /root/repo/scale10), SPARK_GRAFT_CPUS
-(default 32 — the bench shape), SPARK_GRAFT_REPS (default 2),
+(passed through when set; unset, the JVM uses LocalSession's default
+of 4 cores), SPARK_GRAFT_REPS (default 2),
 SPARK_GRAFT_DECADES (default 1 — set 2 when the big corpus is x100,
 e.g. SPARK_GRAFT_X10=/root/repo/scale100, so the reported slope stays
 per-decade and comparable across rehearsal scales).
@@ -37,9 +38,8 @@ BUDGET = os.path.join(os.path.dirname(__file__), "..",
                       "src", "main", "resources", "bench_budget.tsv")
 
 
-def time_queries(sf_dir, names, cpus, reps):
-    env = dict(os.environ, SPARK_GRAFT_SF_DIR=sf_dir,
-               SPARK_GRAFT_CPUS=cpus, SPARK_GRAFT_REPS=reps)
+def time_queries(sf_dir, names, reps):
+    env = dict(os.environ, SPARK_GRAFT_SF_DIR=sf_dir, SPARK_GRAFT_REPS=reps)
     cmd = ["sbt", "-batch", "runMain graft.TimeQuery " + " ".join(names)]
     out = subprocess.run(cmd, env=env, capture_output=True, text=True,
                          cwd=os.path.join(os.path.dirname(__file__), ".."))
@@ -78,13 +78,13 @@ def main(argv):
         names = top_floors()
     base = os.environ.get("SPARK_GRAFT_BASE", "/root/testdata/sf0.1")
     x10 = os.environ.get("SPARK_GRAFT_X10", "/root/repo/scale10")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "4 (LocalSession default)")
     reps = os.environ.get("SPARK_GRAFT_REPS", "2")
     decades = float(os.environ.get("SPARK_GRAFT_DECADES", "1"))
     print(f"[rehearsal] timing {len(names)} queries at {base} ...")
-    t_base = time_queries(base, names, cpus, reps)
+    t_base = time_queries(base, names, reps)
     print(f"[rehearsal] timing {len(names)} queries at {x10} ...")
-    t_x10 = time_queries(x10, names, cpus, reps)
+    t_x10 = time_queries(x10, names, reps)
     flagged = []
     with open(report, "w") as f:
         f.write("# scaling-slope rehearsal (tools/scale_rehearsal.py)\n")

@@ -109,80 +109,67 @@ class RaiseGuardTest(unittest.TestCase):
                         reverify_text="# q_fast mentioned in a comment\n")
 
 
-class SentinelTest(unittest.TestCase):
-    """--sentinel normalizes both gates by the host factor measured off
-    a fixed calibration row."""
+class HostBandTest(unittest.TestCase):
+    """--median normalizes both gates by the host factor; three
+    calibration rows hold the median at their ratio whatever q_x does."""
 
     def setUp(self):
         self.tmp = tempfile.mkdtemp()
         self.budget = os.path.join(self.tmp, "bench_budget.tsv")
         self._old_budget = cbb.BUDGET
         cbb.BUDGET = self.budget
-        write(self.budget, "q_sent\t1.000\nq_x\t2.000\n")
+        write(self.budget, "q_c1\t1.000\nq_c2\t1.000\nq_c3\t1.000\n"
+                           "q_x\t2.000\n")
 
     def tearDown(self):
         cbb.BUDGET = self._old_budget
 
-    def bench(self, queries):
+    def bench(self, host, q_x):
+        queries = {"q_c1": host, "q_c2": host, "q_c3": host, "q_x": q_x}
         line = json.dumps({"metric": "bench", "value": sum(queries.values()),
                            "unit": "sec", "queries": queries,
                            "sf": "/root/testdata/sf0.1"})
         return write(os.path.join(self.tmp, "bench.json"), line + "\n")
 
-    def check(self, queries, *extra):
-        return cbb.main(["prog", self.bench(queries),
-                         "--sentinel", "q_sent", *extra])
+    def check(self, host, q_x, *extra):
+        return cbb.main(["prog", self.bench(host, q_x), "--median", *extra])
 
     def test_slow_host_band_absorbed(self):
-        # whole capture 1.4x slow (q_x at 2.8 > 1.5x floor raw... no:
-        # 2.8 < 3.0 raw — use 3.2 > 3.0 raw but 3.2/1.4 = 2.29 < 3.0)
-        rc = self.check({"q_sent": 1.4, "q_x": 3.2})
+        # whole capture 1.4x slow: q_x at 3.2 > 3.0 raw but
+        # 3.2/1.4 = 2.29 < 3.0 normalized
+        rc = self.check(1.4, 3.2)
         self.assertEqual(rc, 0)
 
     def test_raw_mode_still_flags(self):
-        rc = cbb.main(["prog", self.bench({"q_sent": 1.4, "q_x": 3.2})])
+        rc = cbb.main(["prog", self.bench(1.4, 3.2)])
         self.assertEqual(rc, 1)
 
     def test_real_regression_not_absorbed(self):
         # host factor 1.4, but q_x regressed 3x: 6.0/1.4 = 4.3 > 3.0
-        rc = self.check({"q_sent": 1.4, "q_x": 6.0})
+        rc = self.check(1.4, 6.0)
         self.assertEqual(rc, 1)
 
     def test_fast_host_does_not_tighten(self):
         # host 2x fast; q_x within raw budget must still pass (h
         # clamps at 1, never below)
-        rc = self.check({"q_sent": 0.5, "q_x": 2.9})
+        rc = self.check(0.5, 2.9)
         self.assertEqual(rc, 0)
 
     def test_host_factor_capped(self):
-        # a 4x sentinel excursion is not a credible host band: h clamps
-        # at 2, so a query needing 3x absorption still fails
-        rc = self.check({"q_sent": 4.0, "q_x": 8.9})
+        # a 4x excursion is not a credible host band: h clamps at 2,
+        # so a query needing 3x absorption still fails
+        rc = self.check(4.0, 8.9)
         self.assertEqual(rc, 1)
-
-    def test_missing_sentinel_refuses(self):
-        with self.assertRaises(SystemExit):
-            self.check({"q_x": 2.0})
 
     def test_update_raise_guard_normalized(self):
         # 1.4x host band: q_x at 2.72 raw (> 1.3x floor) but 1.94
         # normalized (< 1.3x floor) — recordable without adjudication
-        rc = cbb.main(["prog", self.bench({"q_sent": 1.4, "q_x": 2.72}),
-                       "--update", "--sentinel", "q_sent"])
+        rc = self.check(1.4, 2.72, "--update")
         self.assertEqual(rc, 0)
 
     def test_update_raise_guard_still_arms_past_band(self):
         with self.assertRaises(SystemExit):
-            cbb.main(["prog", self.bench({"q_sent": 1.4, "q_x": 6.0}),
-                      "--update", "--sentinel", "q_sent"])
-
-    def test_default_sentinel_name(self):
-        # bare --sentinel resolves to the default calibration row
-        write(self.budget, "q_topk_orders\t1.000\nq_x\t2.000\n")
-        rc = cbb.main(["prog",
-                       self.bench({"q_topk_orders": 1.4, "q_x": 3.2}),
-                       "--sentinel"])
-        self.assertEqual(rc, 0)
+            self.check(1.4, 6.0, "--update")
 
 
 class MultiCaptureTest(unittest.TestCase):
@@ -324,11 +311,6 @@ class MedianHostTest(unittest.TestCase):
             {"q_a": 3.0, "q_b": 3.0, "q_c": 3.0, "q_d": 3.0, "q_e": 9.5}),
             "--median"])
         self.assertEqual(rc, 1)
-
-    def test_sentinel_and_median_mutually_exclusive(self):
-        with self.assertRaises(SystemExit):
-            cbb.main(["prog", self.bench({"q_a": 1.0}), "--median",
-                      "--sentinel", "q_a"])
 
     def test_update_commits_normalized_floors(self):
         # the round-16 ADVICE ratchet: a 1.4x host band during --update
