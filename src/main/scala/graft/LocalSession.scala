@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The local session the mains ([[Bench]], [[TimeQuery]], [[Verify]],
-  * [[Explain]]) run under: `local[SPARK_GRAFT_CPUS]` (default 4), that
+  * [[Explain]], the example pipelines and [[tools.ScaleGen]]) run under: `local[SPARK_GRAFT_CPUS]` (default 4), that
   * many shuffle partitions unless the caller widens them, AQE on, UTC,
   * no UI.
   */

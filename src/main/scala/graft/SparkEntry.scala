@@ -174,8 +174,10 @@ object SparkEntry {
     "dedup_lsh_pairs_wide" -> (Dedup.lshWideCandidatePairs _),
     "dedup_lsh_incremental" -> (Dedup.lshIncrementalPairs _),
     "dedup_bloom" -> (Dedup.bloomIncremental _),
-    "dedup_dup_spans" -> ((s: SparkSession, d: String) => Dedup.dupSpans(s, d)),
-    "dedup_span_clean" -> ((s: SparkSession, d: String) => Dedup.spanClean(s, d)),
+    "dedup_dup_spans" -> ((s: SparkSession, d: String) =>
+      Dedup.dupSpans(s, d).orderBy("doc_id", "span_start")),
+    "dedup_span_clean" -> ((s: SparkSession, d: String) =>
+      Dedup.spanClean(s, d).orderBy("doc_id")),
     "dedup_clusters" -> (Dedup.clustersQuery _),
     "dedup_clusters_dist" -> (Dedup.clustersDistQuery _),
     "dedup_survivors" -> (Dedup.survivors _),

@@ -18,10 +18,34 @@ object Tables {
     * session, the same naive reading DuckDB gives it). Both normalize
     * to identical session-TZ timestamps, so operators and oracle
     * comparisons are generation-agnostic.
+    *
+    * The schema comes from ONE data file's footer, read on the driver
+    * (the first data file in path order — the file Spark's own
+    * non-merging inference reads, converted by Spark's own
+    * `ParquetToSparkSchemaConverter` under the session conf) and is
+    * handed to `spark.read.schema(..)`: no schema-inference job is
+    * submitted (`spark.read.parquet(path)` runs a one-task
+    * `mergeSchemasInParallel` job per call). A path that is missing or
+    * empty, partitioned (`k=v` subdirectories), carries parquet
+    * summary files or an empty file, or has an unreadable footer falls
+    * back to Spark's inference, so the answer — and the error for a
+    * bad path — is Spark's in every case.
     */
   def apply(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = pathOf(sfDir, name)
+    load(spark, name, path, listing(spark, path))
+  }
+
+  private def pathOf(sfDir: String, name: String): String =
+    s"$sfDir/$name.parquet"
+
+  private def load(spark: SparkSession, name: String, path: String,
+                   files: Option[Listing]): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = spark.read.parquet(s"$sfDir/$name.parquet")
+    val df = files.flatMap(footerSchema(spark, _)) match {
+      case Some(schema) => spark.read.schema(schema).parquet(path)
+      case None => spark.read.parquet(path)
+    }
     df.schema.fields.find(_.name == "ts").map(_.dataType) match {
       case Some(org.apache.spark.sql.types.LongType) if name == "events" =>
         df.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
@@ -31,6 +55,52 @@ object Tables {
       case _ => df
     }
   }
+
+  /** One listing of a table path, shared by the schema read and the
+    * [[spread]] gate. `data` holds the non-hidden regular files;
+    * `plain` is false when the layout needs Spark's own inference
+    * (subdirectories, summary files, an empty file, or no file).
+    */
+  private final case class Listing(
+      conf: org.apache.hadoop.conf.Configuration,
+      data: Seq[org.apache.hadoop.fs.FileStatus],
+      plain: Boolean)
+
+  /** None when the path is missing or cannot be listed. */
+  private def listing(spark: SparkSession, path: String): Option[Listing] =
+    try {
+      val p = new org.apache.hadoop.fs.Path(path)
+      val conf = spark.sessionState.newHadoopConf()
+      val fs = p.getFileSystem(conf)
+      if (!fs.exists(p)) return None
+      val st = fs.getFileStatus(p)
+      if (!st.isDirectory) return Some(Listing(conf, Seq(st), st.getLen > 0))
+      // Spark's own hidden-name rule (InMemoryFileIndex)
+      val (hidden, visible) = fs.listStatus(p).toSeq.partition { f =>
+        val n = f.getPath.getName
+        (n.startsWith("_") && !n.contains("=")) || n.startsWith(".") ||
+          n.endsWith("._COPYING_")
+      }
+      val summaries = hidden.exists { f =>
+        val n = f.getPath.getName
+        n == "_metadata" || n == "_common_metadata"
+      }
+      val data = visible.filter(_.isFile)
+      Some(Listing(conf, data,
+        plain = data.nonEmpty && data.size == visible.size && !summaries &&
+          data.forall(_.getLen > 0)))
+    } catch { case scala.util.control.NonFatal(_) => None }
+
+  /** The first data file's schema, None when the layout or the footer
+    * needs Spark's inference instead.
+    */
+  private def footerSchema(spark: SparkSession, l: Listing)
+      : Option[org.apache.spark.sql.types.StructType] =
+    if (!l.plain) None
+    else try {
+      Some(org.apache.spark.sql.graft.bridge.parquetFooterSchema(
+        spark, l.conf, l.data.minBy(_.getPath.toString)))
+    } catch { case scala.util.control.NonFatal(_) => None }
 
   /** [[apply]], spread to full core parallelism when the SCAN cannot
     * provide it — the feeder for CPU-heavy per-row kernels (md5
@@ -71,8 +141,10 @@ object Tables {
     */
   def spread(spark: SparkSession, sfDir: String, name: String,
              keyCol: String = null): DataFrame = {
-    val df = apply(spark, sfDir, name)
-    if (scanIsOneSplit(spark, s"$sfDir/$name.parquet")) {
+    val path = pathOf(sfDir, name)
+    val files = listing(spark, path)
+    val df = load(spark, name, path, files)
+    if (files.exists(oneSplit(spark, _))) {
       val n = spark.conf.get("spark.sql.shuffle.partitions").toInt
       // deterministic hash key, 32n distinct values (guide §2.5):
       // round-robin repartition would pay a LOCAL SORT of the single
@@ -98,25 +170,16 @@ object Tables {
     */
   private[graft] def scanIsOneSplit(spark: SparkSession,
                                     path: String): Boolean =
+    listing(spark, path).exists(oneSplit(spark, _))
+
+  private def oneSplit(spark: SparkSession, l: Listing): Boolean =
     try {
-      val p = new org.apache.hadoop.fs.Path(path)
-      val conf = spark.sessionState.newHadoopConf()
-      val fs = p.getFileSystem(conf)
-      if (!fs.exists(p)) return false
-      val st = fs.getFileStatus(p)
-      val data =
-        if (st.isDirectory)
-          fs.listStatus(p).toSeq.filter { f =>
-            val n = f.getPath.getName
-            f.isFile && f.getLen > 0 &&
-              !n.startsWith("_") && !n.startsWith(".")
-          }
-        else Seq(st)
-      if (data.size != 1 || data.head.getLen <= 0) return false
+      val data = l.data.filter(_.getLen > 0)
+      if (data.size != 1) return false
       val maxPart =
         org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
           spark.conf.get("spark.sql.files.maxPartitionBytes", "128m"))
-      data.head.getLen <= maxPart || parquetRowGroups(conf, data.head) == 1
+      data.head.getLen <= maxPart || parquetRowGroups(l.conf, data.head) == 1
     } catch { case scala.util.control.NonFatal(_) => false }
 
   /** Row-group count off the parquet footer — only consulted for a

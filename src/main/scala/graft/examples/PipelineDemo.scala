@@ -40,19 +40,13 @@ object PipelineDemo {
       .select(col("doc_id"), col("text"), col("lang"), col("source"),
         length(col("text")).cast("long").as("n_chars"))
     out.write.mode("overwrite").parquet(s"$outDir/documents.parquet")
-    spark.read.parquet(s"$outDir/documents.parquet").count()
+    Tables(spark, outDir, "documents").count()
   }
 
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse("/tmp/pipeline-demo")
     val src = if (args.length > 1) args(1) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession("WARN")
 
     val total = Tables(spark, src, "documents").count()
 

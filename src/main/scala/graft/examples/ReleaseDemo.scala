@@ -2,7 +2,7 @@ package graft.examples
 
 import graft.DataVersion
 import graft.operators.{Dedup, Manifest}
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 
 /** End-to-end corpus RELEASE — the artifact a data team actually ships
@@ -37,14 +37,7 @@ object ReleaseDemo {
     val corpus = args.headOption.getOrElse(defaultCorpus)
     val out = if (args.length > 1) args(1)
       else java.nio.file.Files.createTempDirectory("graft-release").toString
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession("WARN")
 
     val docs = graft.Tables(spark, corpus, "documents")
     val nDocs = docs.count()

@@ -2,11 +2,11 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graft.bridge
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Rabin-Karp kernel: polynomial hash base 31 mod 2^31−1 over Unicode
@@ -125,6 +125,74 @@ object RollingHashUtil {
     new GenericArrayData(out)
   }
 
+  /** Duplicate-span islands of one document. `pos` holds the 1-based
+    * code-point positions of its duplicated k-gram windows, in any
+    * order; window p covers code points [p, p+k−1], so two windows at
+    * p < p' cover one contiguous span iff p' − p ≤ k (a gap of k
+    * leaves them touching, k+1 leaves one code point uncovered).
+    * Returns the islands in position order, flattened as
+    * (start, end, windows) triples with end = last window + k − 1.
+    */
+  private def islands(pos: ArrayData, k: Int): Array[Long] = {
+    val n = pos.numElements()
+    val p = new Array[Long](n)
+    var i = 0
+    while (i < n) { p(i) = pos.getLong(i); i += 1 }
+    java.util.Arrays.sort(p)
+    val out = new Array[Long](3 * n)
+    var m = 0
+    i = 0
+    while (i < n) {
+      var j = i + 1
+      while (j < n && p(j) - p(j - 1) <= k) j += 1
+      out(m) = p(i); out(m + 1) = p(j - 1) + k - 1; out(m + 2) = j - i
+      m += 3
+      i = j
+    }
+    java.util.Arrays.copyOf(out, m)
+  }
+
+  /** [[islands]] as rows of (span_start, span_end, span_len,
+    * n_windows) — the [[DupSpanIslands]] result.
+    */
+  def spanIslands(pos: ArrayData, k: Int): GenericArrayData = {
+    val isl = islands(pos, k)
+    val rows = new Array[Any](isl.length / 3)
+    var i = 0
+    while (i < rows.length) {
+      val s = isl(3 * i)
+      val e = isl(3 * i + 1)
+      rows(i) = new GenericInternalRow(Array[Any](s, e, e - s + 1, isl(3 * i + 2)))
+      i += 1
+    }
+    new GenericArrayData(rows)
+  }
+
+  /** The text with every [[islands]] span cut out, indexed by code
+    * point (a surrogate pair is one position, as in the windows and in
+    * SQL `substr`/`length`). Spans past the text's end cut nothing.
+    */
+  def cutSpans(text: UTF8String, pos: ArrayData, k: Int): UTF8String = {
+    val isl = islands(pos, k)
+    if (isl.isEmpty) return text
+    val (cp, n) = codePoints(text.toString)
+    val sb = new java.lang.StringBuilder(n)
+    def keep(from: Long, to: Long): Unit = {
+      var c = math.max(from, 1L)
+      val hi = math.min(to, n.toLong)
+      while (c <= hi) { sb.appendCodePoint(cp((c - 1).toInt)); c += 1 }
+    }
+    var cur = 1L
+    var i = 0
+    while (i < isl.length) {
+      keep(cur, isl(i) - 1)
+      cur = isl(i + 1) + 1
+      i += 3
+    }
+    keep(cur, n)
+    UTF8String.fromString(sb.toString)
+  }
+
   def rollingHash(s: UTF8String, window: Int): GenericArrayData = {
     val str = s.toString
     // Decode UTF-16 to code points once; all window arithmetic below is
@@ -234,6 +302,88 @@ object WindowHashes {
   /** Column-API entry point: `WindowHashes.of($"text", 16)`. */
   def of(text: Column, k: Int): Column =
     bridge.column(WindowHashes(bridge.expression(text), k))
+}
+
+/** Native codegen'd `dup_span_islands(positions, k)` →
+  * `array<struct<span_start, span_end, span_len, n_windows>>`: one
+  * document's duplicated-window positions (1-based code points, any
+  * order) folded into maximal covered spans in position order (see
+  * [[RollingHashUtil.spanIslands]]) — the per-document half of
+  * duplicate-span detection, one call per doc instead of a lag window,
+  * a running-sum window and a regroup over every flagged window.
+  */
+case class DupSpanIslands(child: Expression, k: Int)
+    extends UnaryExpression {
+  require(k >= 2, s"k must be >= 2, got $k")
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
+    case other => TypeCheckResult.TypeCheckFailure(
+      s"dup_span_islands needs array<bigint> positions, got $other")
+  }
+
+  override def dataType: DataType = ArrayType(DupSpanIslands.islandType,
+    containsNull = false)
+  override def nullable: Boolean = child.nullable
+  override def prettyName: String = "dup_span_islands"
+
+  override protected def nullSafeEval(input: Any): Any =
+    RollingHashUtil.spanIslands(input.asInstanceOf[ArrayData], k)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, c =>
+      s"${ev.value} = graft.functions.RollingHashUtil.spanIslands($c, $k);")
+
+  override protected def withNewChildInternal(newChild: Expression): DupSpanIslands =
+    copy(child = newChild)
+}
+
+object DupSpanIslands {
+  val islandType: StructType = StructType(
+    Seq("span_start", "span_end", "span_len", "n_windows")
+      .map(StructField(_, LongType, nullable = false)))
+
+  /** Column-API entry point: `DupSpanIslands.of($"pos", 32)`. */
+  def of(positions: Column, k: Int): Column =
+    bridge.column(DupSpanIslands(bridge.expression(positions), k))
+}
+
+/** Native codegen'd `cut_dup_spans(text, positions, k)` → the text with
+  * the [[DupSpanIslands]] spans of the same positions removed, cut by
+  * code point (see [[RollingHashUtil.cutSpans]]).
+  */
+case class CutDupSpans(left: Expression, right: Expression, k: Int)
+    extends BinaryExpression {
+  require(k >= 2, s"k must be >= 2, got $k")
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    (left.dataType, right.dataType) match {
+      case (_: StringType, ArrayType(LongType, _)) => TypeCheckResult.TypeCheckSuccess
+      case (l, r) => TypeCheckResult.TypeCheckFailure(
+        s"cut_dup_spans needs (string, array<bigint>), got ($l, $r)")
+    }
+
+  override def dataType: DataType = left.dataType
+  override def prettyName: String = "cut_dup_spans"
+
+  override protected def nullSafeEval(text: Any, pos: Any): Any =
+    RollingHashUtil.cutSpans(text.asInstanceOf[UTF8String],
+      pos.asInstanceOf[ArrayData], k)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (t, p) =>
+      s"${ev.value} = graft.functions.RollingHashUtil.cutSpans($t, $p, $k);")
+
+  override protected def withNewChildrenInternal(newLeft: Expression,
+      newRight: Expression): CutDupSpans =
+    copy(left = newLeft, right = newRight)
+}
+
+object CutDupSpans {
+  /** Column-API entry point: `CutDupSpans.of($"text", $"pos", 32)`. */
+  def of(text: Column, positions: Column, k: Int): Column =
+    bridge.column(CutDupSpans(bridge.expression(text),
+      bridge.expression(positions), k))
 }
 
 /** Native codegen'd `winnow(text, k, w)` → sorted distinct

@@ -49,7 +49,10 @@ object BpeTrainer {
     * same model-artifact scale as [[Similarity]]'s k-means centroids —
     * and covers any real web corpus's post-count vocabulary. Above it,
     * the batched distributed loop runs: the fast path is an
-    * optimization, never a scale ceiling.
+    * optimization, never a scale ceiling. The gate costs no job of its
+    * own: the type count is observed by the job that checkpoints the
+    * type table ([[wordTypes]]), so the fast path is that job plus one
+    * `collect`.
     */
   val driverTypeLimit = 2000000L
 
@@ -79,17 +82,17 @@ object BpeTrainer {
       s"$part#$merges#$smallTypeLimit")
 
   /** Pass 1, the only corpus-sized job: whitespace word types with
-    * counts, split into character symbols + the end-of-word marker.
+    * counts, split into character symbols + the end-of-word marker,
+    * and the number of types (observed by the same job).
     * Checkpointed — every consumer (driver collect or iterative
     * rounds) re-reads the materialized table, never the corpus.
     */
-  private def wordTypes(spark: SparkSession, dir: String): DataFrame =
-    Tables(spark, dir, "documents")
+  private def wordTypes(spark: SparkSession, dir: String): (DataFrame, Long) =
+    Ranks.checkpointCounted(Tables(spark, dir, "documents")
       .select(explode(split(trim(col("text")), " ")).as("w"))
       .groupBy("w").agg(count(lit(1)).as("n"))
       .select(col("w"),
-        concat(split(col("w"), ""), array(lit("</w>"))).as("sym"), col("n"))
-      .localCheckpoint()
+        concat(split(col("w"), ""), array(lit("</w>"))).as("sym"), col("n")))
 
   private def collectTypes(vocab: DataFrame): Array[(Array[String], Long)] =
     vocab.select("sym", "n").collect()
@@ -386,8 +389,8 @@ object BpeTrainer {
   private[graft] def trainMerges(spark: SparkSession, dir: String,
       merges: Int = defaultMerges,
       smallTypeLimit: Long = driverTypeLimit): Seq[(Long, String, String, String, Long)] = {
-    val vocab = wordTypes(spark, dir)
-    if (vocab.count() <= smallTypeLimit) trainDriver(collectTypes(vocab), merges)._1
+    val (vocab, nTypes) = wordTypes(spark, dir)
+    if (nTypes <= smallTypeLimit) trainDriver(collectTypes(vocab), merges)._1
     else trainBatches(vocab, merges)._1
   }
 
@@ -420,34 +423,34 @@ object BpeTrainer {
     * Application runs on the word-type table only (driver path: the
     * training state IS the segmentation; distributed path: one batched
     * pass per training round) — the corpus itself is never re-segmented
-    * row by row, the 1000× type-table reduction again.
+    * row by row, the 1000× type-table reduction again. The driver path
+    * builds the table on the driver, so only the distributed path
+    * checkpoints it.
     */
   private[graft] def segmentation(spark: SparkSession, dir: String,
       merges: Int = defaultMerges,
       smallTypeLimit: Long = driverTypeLimit): DataFrame = {
     import spark.implicits._
     graft.Memo(modelKey(spark, dir, "seg", merges, smallTypeLimit)) {
-      val vocab = wordTypes(spark, dir)
-      val seg =
-        if (vocab.count() <= smallTypeLimit) {
-          val rows = vocab.select("w", "sym", "n").collect()
-          val types = rows.map(r => (r.getSeq[String](1).toArray, r.getLong(2)))
-          val (_, finalSyms) = trainDriver(types, merges)
-          rows.map(_.getString(0)).zip(finalSyms.map(_.toSeq))
-            .toSeq.toDF("w", "sub")
-        } else {
-          val batches = trainBatches(vocab, merges)._2
-          var t = vocab.select(col("w"), col("sym"))
-          // replay the training batches: one pass (and one lineage
-          // cut) per ROUND, not per merge — a 256-rule vocabulary
-          // would otherwise nest 256 aggregate expressions in one plan
-          batches.foreach { batch =>
-            t = t.select(col("w"), applyMergeBatch(col("sym"), batch).as("sym"))
-              .localCheckpoint()
-          }
-          t.withColumnRenamed("sym", "sub")
+      val (vocab, nTypes) = wordTypes(spark, dir)
+      if (nTypes <= smallTypeLimit) {
+        val rows = vocab.select("w", "sym", "n").collect()
+        val types = rows.map(r => (r.getSeq[String](1).toArray, r.getLong(2)))
+        val (_, finalSyms) = trainDriver(types, merges)
+        rows.map(_.getString(0)).zip(finalSyms.map(_.toSeq))
+          .toSeq.toDF("w", "sub")
+      } else {
+        val batches = trainBatches(vocab, merges)._2
+        var t = vocab.select(col("w"), col("sym"))
+        // replay the training batches: one pass (and one lineage
+        // cut) per ROUND, not per merge — a 256-rule vocabulary
+        // would otherwise nest 256 aggregate expressions in one plan
+        batches.foreach { batch =>
+          t = t.select(col("w"), applyMergeBatch(col("sym"), batch).as("sym"))
+            .localCheckpoint()
         }
-      seg.localCheckpoint(true)
+        t.withColumnRenamed("sym", "sub").localCheckpoint(true)
+      }
     }
   }
 

@@ -322,7 +322,10 @@ object Dedup {
     * edges the whole graph fits driver memory trivially, and
     * union-find beats several distributed propagation rounds' fixed
     * job overhead. Above it, the distributed loop runs — the fast
-    * path is an optimization, never a scale ceiling.
+    * path is an optimization, never a scale ceiling. The gate costs no
+    * job of its own: the edge count is observed by the job that
+    * checkpoints the edge table ([[Ranks.checkpointCounted]]), so the
+    * fast path is that job plus one `collect`.
     */
   val smallGraphEdges = 2000000L
 
@@ -340,15 +343,15 @@ object Dedup {
 
   def clusters(pairs: DataFrame, maxIters: Int = -1,
                smallGraphLimit: Long = smallGraphEdges): DataFrame = {
-    val edges = pairs.select(col("a_id").as("src"), col("b_id").as("dst"))
-      .unionByName(pairs.select(col("b_id").as("src"), col("a_id").as("dst")))
-      .localCheckpoint()
-    // count is a cheap action on the materialized checkpoint
-    if (edges.count() <= smallGraphLimit) return unionFindClusters(edges)
-    var labels = edges.select(col("src").as("id")).distinct()
-      .withColumn("cluster", col("id"))
-      .localCheckpoint()
-    val cap = if (maxIters > 0) maxIters else autoMaxIters(labels.count())
+    val (edges, nEdges) = Ranks.checkpointCounted(
+      pairs.select(col("a_id").as("src"), col("b_id").as("dst"))
+        .unionByName(pairs.select(col("b_id").as("src"), col("a_id").as("dst"))))
+    if (nEdges <= smallGraphLimit) return unionFindClusters(edges)
+    val (nodes, nNodes) = Ranks.checkpointCounted(
+      edges.select(col("src").as("id")).distinct()
+        .withColumn("cluster", col("id")))
+    var labels = nodes
+    val cap = if (maxIters > 0) maxIters else autoMaxIters(nNodes)
     var converged = false
     var it = 0
     while (!converged && it < cap) {
@@ -889,78 +892,59 @@ object Dedup {
     * Scale shape: one narrow codegen'd corpus pass emits the rolled
     * per-position hashes ([[graft.functions.WindowHashes]], O(n) per
     * doc); duplication is ONE count-over-hash window (single shuffle
-    * by hash, never an all-pairs join); span assembly is
-    * gaps-and-islands per document (lag + running sum + group — one
-    * shuffle by doc). Positions are 1-based code points.
+    * by hash, never an all-pairs join); span assembly is one
+    * `groupBy(doc_id)` collecting each document's flagged positions
+    * (one shuffle by doc) and one native call per document
+    * ([[graft.functions.DupSpanIslands]]) that folds them into
+    * islands, emitted through `inline`. Positions are 1-based code
+    * points. A document's spans come out in position order; documents
+    * come in no particular order (the registered query sorts them for
+    * presentation — a pipeline stage never needs the sort).
     */
   def dupSpans(spark: SparkSession, dir: String,
-               k: Int = dupSpanK): DataFrame = {
+               k: Int = dupSpanK): DataFrame =
+    dupPositions(spark, dir, k)
+      .select(col("doc_id"),
+        inline(graft.functions.DupSpanIslands.of(col("pos"), k)))
+
+  /** (doc_id, pos): per document, the 1-based code-point positions of
+    * its k-gram windows whose hash occurs ≥ 2 times in the corpus;
+    * documents without one are absent.
+    */
+  private def dupPositions(spark: SparkSession, dir: String,
+                           k: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val windows = Tables(spark, dir, "documents")
+    Tables(spark, dir, "documents")
       .select(col("doc_id"),
         posexplode(graft.functions.WindowHashes.of(col("text"), k))
           .as(Seq("p0", "h")))
-      .select(col("doc_id"), (col("p0") + 1).cast("long").as("pos"), col("h"))
-    val flagged = windows
       .withColumn("c", count(lit(1)).over(Window.partitionBy("h")))
       .filter(col("c") >= 2)
-    val byDoc = Window.partitionBy("doc_id").orderBy("pos")
-    flagged
-      .withColumn("prev", lag(col("pos"), 1).over(byDoc))
-      // two dup windows at p < p' cover one contiguous span iff
-      // p' − p ≤ k; a larger gap starts a new island
-      .withColumn("brk",
-        when(col("prev").isNull || col("pos") - col("prev") <= k, 0)
-          .otherwise(1))
-      .withColumn("g", sum(col("brk")).over(byDoc))
-      .groupBy(col("doc_id"), col("g"))
-      .agg(min(col("pos")).as("span_start"),
-        (max(col("pos")) + k - 1).as("span_end"),
-        count(lit(1)).as("n_windows"))
-      .select(col("doc_id"), col("span_start"), col("span_end"),
-        (col("span_end") - col("span_start") + 1).as("span_len"),
-        col("n_windows"))
-      .orderBy("doc_id", "span_start")
+      .groupBy("doc_id")
+      .agg(collect_list((col("p0") + 1).cast("long")).as("pos"))
   }
 
   /** Duplicate-span REMOVAL — [[dupSpans]]' cut list applied: each
     * document's text with every duplicated span excised (the
     * aggressive variant of Lee et al.'s substring dedup; a keep-first
     * policy is a downstream choice over the same cut list), plus the
-    * removed-character count. Stitching is one ordered fold over the
-    * doc's span array (spans are disjoint and sorted, so each step
-    * appends the kept segment before the span and advances the cursor
-    * past it) — per-document work is O(spans), and the interpreted
-    * lambda runs once per DOC, not per token, so it stays off the hot
-    * path.
+    * removed-character count. The document's flagged positions join
+    * its text, and one native call per document
+    * ([[graft.functions.CutDupSpans]]) builds the same islands as
+    * [[dupSpans]] and cuts them by code point — O(text) per document,
+    * no per-span rows, no sort and no interpreted lambda. Rows come in
+    * no particular order (the registered query sorts by doc_id).
     */
   def spanClean(spark: SparkSession, dir: String,
-                k: Int = dupSpanK): DataFrame = {
-    val spans = dupSpans(spark, dir, k)
-      .groupBy("doc_id")
-      .agg(sort_array(collect_list(struct(
-        col("span_start").as("s"), col("span_end").as("e")))).as("spans"))
+                k: Int = dupSpanK): DataFrame =
     Tables(spark, dir, "documents")
-      .join(spans, Seq("doc_id"), "left")
+      .join(dupPositions(spark, dir, k), Seq("doc_id"), "left")
       .withColumn("clean_text",
-        when(col("spans").isNull, col("text")).otherwise(
-          aggregate(
-            col("spans"),
-            struct(lit("").cast("string").as("acc"), lit(1L).as("cur")),
-            (st, sp) => struct(
-              concat(st.getField("acc"),
-                col("text").substr(st.getField("cur").cast("int"),
-                  (sp.getField("s") - st.getField("cur")).cast("int"))).as("acc"),
-              (sp.getField("e") + 1L).as("cur")),
-            st => concat(st.getField("acc"),
-              col("text").substr(st.getField("cur").cast("int"),
-                greatest(lit(0),
-                  length(col("text")) - st.getField("cur") + 1).cast("int"))))))
+        when(col("pos").isNull, col("text")).otherwise(
+          graft.functions.CutDupSpans.of(col("text"), col("pos"), k)))
       .select(col("doc_id"), col("clean_text"),
         (length(col("text")) - length(col("clean_text"))).cast("long")
           .as("n_chars_removed"))
-      .orderBy("doc_id")
-  }
 
   /** Jaccard threshold for [[prefixJaccardJoin]] as an exact integer
     * ratio (τ = num/den = 0.6): every similarity cut in the operator is

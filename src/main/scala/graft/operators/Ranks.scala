@@ -16,6 +16,19 @@ import org.apache.spark.sql.functions._
   */
 object Ranks {
 
+  /** Eager `localCheckpoint` plus the frame's row count, both from the
+    * ONE job the checkpoint runs: the count rides along as a
+    * `Dataset.observe` metric instead of a second `count()` job over
+    * the materialized table. For driver fast paths that gate on the
+    * size of a table they checkpoint anyway (never `limit(n + 1)`,
+    * which `executeTake` runs as a series of growing jobs).
+    */
+  private[operators] def checkpointCounted(df: DataFrame): (DataFrame, Long) = {
+    val rows = org.apache.spark.sql.Observation()
+    val cp = df.observe(rows, count(lit(1)).as("n")).localCheckpoint()
+    (cp, rows.get("n").asInstanceOf[Long])
+  }
+
   /** Distributed `row_number` over a total order — the classic
     * two-pass range-sort rank:
     *

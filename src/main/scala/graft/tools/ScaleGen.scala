@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
 /** Synthesize a ×FACTOR corpus from an existing testdata directory —
@@ -98,16 +98,12 @@ object ScaleGen {
     //    sign flip on odd k/64 decades (norm-preserving,
     //    decorrelated) — 128 distinct transforms.
     // k ≤ 25 reproduces the round-16 transforms exactly, so scale10
-    // regenerates byte-identical.
+    // regenerates byte-identical at a given core count (the session is
+    // LocalSession's; the core count sets the scan splits, and so which
+    // rows land in which of the 8 output files — never the row set).
     require(factor >= 1 && factor <= 128,
       s"factor must be in [1, 128] (embedding-transform bound), got $factor")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession("WARN")
 
     def read(t: String): DataFrame = spark.read.parquet(s"$src/$t.parquet")
     def write(df: DataFrame, t: String): Unit =

@@ -9,8 +9,8 @@ import org.apache.spark.sql.classic.ExpressionUtils
   * be used from the public DataFrame API. Spark 4 routes Column through
   * ColumnNode (Connect refactor); `classic.ExpressionUtils` is the
   * supported classic-session conversion and is package-private to sql —
-  * hence this one-file residence in the sql package namespace. Nothing
-  * else internal is touched.
+  * hence this one-file residence in the sql package namespace. Every
+  * other member names the internal it reaches.
   */
 object bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
@@ -39,4 +39,26 @@ object bridge {
         new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
           "graft.functions", name),
         builder)
+
+  /** The Spark schema of one parquet data file, read from its footer
+    * on the driver exactly as Spark's schema inference reads it
+    * (`ParquetFileFormat.readSchemaFromFooter` — the Spark row schema
+    * stored in the footer when present, else the parquet message type
+    * converted under the session's `SQLConf`), without the one-task
+    * job `spark.read.parquet` submits to do the same. The footer is
+    * read without its row-group metadata.
+    */
+  def parquetFooterSchema(spark: org.apache.spark.sql.SparkSession,
+                          conf: org.apache.hadoop.conf.Configuration,
+                          file: org.apache.hadoop.fs.FileStatus)
+      : org.apache.spark.sql.types.StructType = {
+    import org.apache.spark.sql.execution.datasources.parquet.{
+      ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+    val meta = ParquetFooterReader.readFooter(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(file, conf),
+      org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS)
+    ParquetFileFormat.readSchemaFromFooter(
+      new org.apache.parquet.hadoop.Footer(file.getPath, meta),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+  }
 }

@@ -277,4 +277,25 @@ class BpeSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSeq
     assert(got === dist)
   }
+
+  test("type-count gate boundary: limit == types and limit == types - 1 agree") {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    def driverBuilt(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.analyzed.collectLeaves().forall(_.isInstanceOf[LocalRelation])
+    import org.apache.spark.sql.functions._
+    val nTypes = Tables(spark, dir, "documents")
+      .select(explode(split(trim(col("text")), " ")).as("w")).distinct().count()
+    def seg(limit: Long) = BpeTrainer.segmentation(spark, dir, 24, limit)
+    def rows(limit: Long) = seg(limit).collect()
+      .map(r => r.getString(0) -> r.getSeq[String](1)).toMap
+    // at the limit the driver builds the table (no checkpoint); one
+    // below, the distributed rounds run and checkpoint it
+    assert(driverBuilt(seg(nTypes)))
+    assert(!driverBuilt(seg(nTypes - 1)))
+    assert(rows(nTypes) === rows(nTypes - 1))
+    assert(rows(nTypes).size.toLong === nTypes)
+    def merges(limit: Long) = BpeTrainer.trainMerges(spark, dir, 24, limit)
+    assert(merges(nTypes) === merges(nTypes - 1))
+    assert(merges(nTypes).nonEmpty)
+  }
 }

@@ -138,4 +138,27 @@ class ClusterSpec extends SparkSpec {
     // something — otherwise the incremental path is vacuously equal
     assert(inc.keys.exists(_ % 10 == 0), "delta nodes present in the graph")
   }
+
+  test("edge-count gate boundary: limit == edges and limit == edges - 1 agree") {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    def driverBuilt(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.analyzed.collectLeaves().forall(_.isInstanceOf[LocalRelation])
+    import spark.implicits._
+    val rnd = new scala.util.Random(11)
+    val pairs = (1 to 40).map { _ =>
+      val a = rnd.nextInt(30).toLong; val b = rnd.nextInt(30).toLong
+      (math.min(a, b), math.max(a, b))
+    }.filter(e => e._1 != e._2).distinct
+    val edges = 2L * pairs.size // the gate counts directed edges
+    def run(limit: Long) = Dedup.clusters(pairs.toDF("a_id", "b_id"),
+      smallGraphLimit = limit)
+    // at the limit the driver union-find answers; one below, the
+    // distributed propagation does
+    assert(driverBuilt(run(edges)))
+    assert(!driverBuilt(run(edges - 1)))
+    val fast = run(edges).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val dist = run(edges - 1).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(fast === dist)
+    assert(fast === unionFind(30, pairs))
+  }
 }

@@ -1,7 +1,7 @@
 package graft
 
-import graft.operators.{BpeTrainer, Dedup, TextAnalysis}
-import org.apache.spark.sql.SaveMode
+import graft.operators.{BpeTrainer, Dedup, Sampling, TextAnalysis}
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
 /** The PipelineDemo composition on a deterministic fixture: the gate
@@ -71,5 +71,87 @@ class PipelineDemoSpec extends SparkSpec {
     enc.foreach { r =>
       assert(r.getLong(1) === r.getString(2).split(" ").length.toLong)
     }
+  }
+
+  /** Upper bound on the Spark jobs one PipelineDemo pass submits over
+    * the fixture below (45 when recorded; 67 before the footer schema
+    * read, the observed gate counts and the native span kernel).
+    */
+  private val passJobBudget = 45
+
+  test("one five-stage pass: no schema-inference job, job count pinned") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+      SparkListenerStageSubmitted}
+    import org.apache.spark.sql.graft.bridge
+    def filler(i: Int) =
+      (1 to 15).map(j => s"the t${i}q$j fox of").mkString(" ")
+    val planted = "this exact passage repeats across two documents"
+    val root = java.nio.file.Files.createTempDirectory("pipe-jobs").toString
+    writeDocs(s"$root/s0", Seq(
+      (1L, s"${filler(1)} $planted", "en", "s"),
+      (2L, s"$planted ${filler(2)}", "en", "s"),
+      (3L, filler(3), "en", "s"),
+      (4L, filler(3), "en", "s"),
+      (5L, (1 to 60).map(_ => "12345").mkString(" "), "en", "s")))
+
+    // the demo's hand-off: (doc_id, text) back to a corpus directory
+    def writeCorpus(inDir: String, kept: DataFrame, outDir: String): Long = {
+      Tables(spark, inDir, "documents")
+        .select(col("doc_id"), col("lang"), col("source"))
+        .join(kept, "doc_id")
+        .select(col("doc_id"), col("text"), col("lang"), col("source"),
+          length(col("text")).cast("long").as("n_chars"))
+        .write.mode("overwrite").parquet(s"$outDir/documents.parquet")
+      spark.read.parquet(s"$outDir/documents.parquet").count()
+    }
+
+    val sc = spark.sparkContext
+    val group = s"pipeline-jobs-${System.nanoTime()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val stages = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      private def ours(p: java.util.Properties) =
+        p != null && p.getProperty("spark.jobGroup.id") == group
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (ours(e.properties)) jobs.incrementAndGet()
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        if (ours(e.properties)) stages.add(e.stageInfo.name)
+    }
+    bridge.drainListenerBus(sc, 10000)
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "PipelineDemoSpec")
+    val counts = try {
+      val src = s"$root/s0"
+      val total = Tables(spark, src, "documents").count()
+      val gated = TextAnalysis.gopherRules(spark, src)
+        .filter(col("gopher_pass")).select("doc_id")
+        .join(Tables(spark, src, "documents"), "doc_id")
+        .select(col("doc_id"), col("text"))
+      val n1 = writeCorpus(src, gated, s"$root/s1")
+      val survivors = Dedup.survivors(spark, s"$root/s1")
+        .join(Tables(spark, s"$root/s1", "documents"), "doc_id")
+        .select(col("doc_id"), col("text"))
+      val n2 = writeCorpus(s"$root/s1", survivors, s"$root/s2")
+      val cleaned = Dedup.spanClean(spark, s"$root/s2").localCheckpoint(true)
+      val removed = cleaned.agg(sum("n_chars_removed")).head().getLong(0)
+      val n3 = writeCorpus(s"$root/s2",
+        cleaned.select(col("doc_id"), col("clean_text").as("text")), s"$root/s3")
+      val tokens = BpeTrainer.encode(spark, s"$root/s3")
+        .agg(sum("n_tokens")).head().getLong(0)
+      val bins = Sampling.packSequences(spark, s"$root/s3").count()
+      bridge.drainListenerBus(sc, 10000)
+      Seq(total, n1, n2, n3, removed, tokens, bins)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    assert(counts.take(4) === Seq(5L, 4L, 3L, 3L))
+    assert(counts(4) === 2L * planted.length)
+    import scala.jdk.CollectionConverters._
+    val names = stages.asScala.toSeq
+    assert(!names.exists(_.startsWith("parquet at Tables")),
+      names.filter(_.startsWith("parquet at Tables")).mkString(", "))
+    assert(jobs.get <= passJobBudget,
+      s"${jobs.get} jobs > $passJobBudget; stages: ${names.mkString(", ")}")
   }
 }
