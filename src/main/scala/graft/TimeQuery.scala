@@ -2,11 +2,15 @@ package graft
 
 /** Single-query timing harness for iteration: runs the named
   * SparkEntry queries N times each (after one warmup materialization)
-  * under the same session config as [[Bench]] and prints min/median
-  * per query. Usage:
+  * through [[Bench.materialize]] — the same heap levelling, noop write
+  * and [[Profile]] as the bench — and prints min/median per query plus
+  * the min-time rep's jobs and task CPU seconds. Usage:
   *
   *   SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 \
   *     sbt "runMain graft.TimeQuery text_repetition [more...]"
+  *
+  * `tools/scale_rehearsal.py` parses the `[time] <name> min=… median=…
+  * reps=…` prefix of each line.
   */
 object TimeQuery {
   def main(args: Array[String]): Unit = {
@@ -21,16 +25,13 @@ object TimeQuery {
     val spark = LocalSession("ERROR",
       sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", LocalSession.cpus))
     val benched = SparkEntry.queries ++ SparkEntry.benchOnly
-    def once(name: String): Double = {
-      val t0 = System.nanoTime()
-      benched(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
     args.foreach { name =>
-      once(name) // warmup
-      val ts = (1 to reps).map(_ => once(name)).sorted
-      println(f"[time] $name%-28s min=${ts.head}%.3f median=${ts(ts.size / 2)}%.3f reps=$reps")
+      def once() = Bench.materialize(spark, sfDir, benched(name))
+      once() // warmup
+      val runs = (1 to reps).map(_ => once()).sortBy(_._1)
+      val (min, p) = runs.head
+      println(f"[time] $name%-28s min=$min%.3f median=${runs(runs.size / 2)._1}%.3f reps=$reps" +
+        f" jobs=${p.jobs} task_cpu_s=${p.taskCpuS}%.3f")
     }
     spark.stop()
   }

@@ -16,15 +16,23 @@ object bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
-  /** Drain the listener bus so a SparkListener's per-query counters
-    * (Bench's shuffle-bytes / peak-memory budgets) are complete before
-    * they are read — task-end events post asynchronously and the last
-    * batch can otherwise land after the timer stops. `listenerBus` is
-    * `private[spark]`; this is the only internal touched.
+  /** Drain the listener bus so a SparkListener's counters
+    * ([[graft.Profile]]'s jobs, stages, task CPU and shuffle bytes) are
+    * complete before they are read — job, stage and task events post
+    * asynchronously and the last ones can otherwise land after the body
+    * returns. Throws if the bus is not empty within `timeoutMs`.
+    * `listenerBus` is `private[spark]`; this is the only internal touched.
     */
   def drainListenerBus(sc: org.apache.spark.SparkContext,
                        timeoutMs: Long): Unit =
     sc.listenerBus.waitUntilEmpty(timeoutMs)
+
+  /** Whether a stage writes a shuffle (a shuffle-map stage): it carries
+    * the id of the shuffle it produces. `StageInfo.shuffleDepId` is
+    * `private[spark]`.
+    */
+  def isShuffleMapStage(stage: org.apache.spark.scheduler.StageInfo): Boolean =
+    stage.shuffleDepId.isDefined
 
   /** Register a function builder on a LIVE session's function registry
     * (the post-construction analog of `SparkSessionExtensions

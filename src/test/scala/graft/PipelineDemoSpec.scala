@@ -80,9 +80,6 @@ class PipelineDemoSpec extends SparkSpec {
   private val passJobBudget = 45
 
   test("one five-stage pass: no schema-inference job, job count pinned") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
-      SparkListenerStageSubmitted}
-    import org.apache.spark.sql.graft.bridge
     def filler(i: Int) =
       (1 to 15).map(j => s"the t${i}q$j fox of").mkString(" ")
     val planted = "this exact passage repeats across two documents"
@@ -105,22 +102,7 @@ class PipelineDemoSpec extends SparkSpec {
       spark.read.parquet(s"$outDir/documents.parquet").count()
     }
 
-    val sc = spark.sparkContext
-    val group = s"pipeline-jobs-${System.nanoTime()}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val stages = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      private def ours(p: java.util.Properties) =
-        p != null && p.getProperty("spark.jobGroup.id") == group
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (ours(e.properties)) jobs.incrementAndGet()
-      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
-        if (ours(e.properties)) stages.add(e.stageInfo.name)
-    }
-    bridge.drainListenerBus(sc, 10000)
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "PipelineDemoSpec")
-    val counts = try {
+    val (counts, pass) = Profile(spark) {
       val src = s"$root/s0"
       val total = Tables(spark, src, "documents").count()
       val gated = TextAnalysis.gopherRules(spark, src)
@@ -139,19 +121,14 @@ class PipelineDemoSpec extends SparkSpec {
       val tokens = BpeTrainer.encode(spark, s"$root/s3")
         .agg(sum("n_tokens")).head().getLong(0)
       val bins = Sampling.packSequences(spark, s"$root/s3").count()
-      bridge.drainListenerBus(sc, 10000)
       Seq(total, n1, n2, n3, removed, tokens, bins)
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
     }
     assert(counts.take(4) === Seq(5L, 4L, 3L, 3L))
     assert(counts(4) === 2L * planted.length)
-    import scala.jdk.CollectionConverters._
-    val names = stages.asScala.toSeq
+    val names = pass.stageNames
     assert(!names.exists(_.startsWith("parquet at Tables")),
       names.filter(_.startsWith("parquet at Tables")).mkString(", "))
-    assert(jobs.get <= passJobBudget,
-      s"${jobs.get} jobs > $passJobBudget; stages: ${names.mkString(", ")}")
+    assert(pass.jobs <= passJobBudget,
+      s"${pass.jobs} jobs > $passJobBudget; stages: ${names.mkString(", ")}")
   }
 }

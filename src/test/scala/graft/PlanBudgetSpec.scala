@@ -1,73 +1,69 @@
 package graft
 
-/** Shuffle budget over the ENTIRE query surface: every SparkEntry query
-  * has a recorded hash-Exchange count, and any change — a new shuffle
-  * sneaking into a refactor, or one disappearing because a subtree got
-  * checkpointed out of the visible plan — fails here until consciously
-  * re-recorded. The handpicked PlanSpec assertions pin the *why* for
-  * key operators; this pins the *what* for all of them.
+import org.apache.spark.sql.DataFrame
+
+/** Work budget over the ENTIRE query surface: every SparkEntry query is
+  * built and written through the `noop` sink at sf0.001 inside a
+  * [[Profile]], and the work it EXECUTED — jobs, stages, shuffle-map
+  * stages, shuffle-write bytes — is held to the recorded pin, eager
+  * construction jobs and shuffles inside checkpointed subtrees included.
+  * A new job, stage or shuffle sneaking into a refactor fails here until
+  * consciously re-recorded. The handpicked PlanSpec assertions pin the
+  * *why* for key operators; this pins the *what* for all of them.
   *
-  * Regenerate after an intentional plan change:
+  * Regenerate after an intentional change:
   *   GRAFT_UPDATE_PLAN_BUDGET=1 sbt "testOnly graft.PlanBudgetSpec"
-  * then commit the refreshed src/test/resources/shuffle_counts.tsv.
+  * then commit the refreshed src/test/resources/executed_work.tsv
+  * (name, jobs, stages, shuffle-map stages, shuffle-write bytes).
   *
-  * Counts are of "Exchange hashpartitioning" in the initial physical
-  * plan at sf0.001 (deterministic under fixed conf; rangepartitioning
-  * presentation sorts are excluded on purpose — they are oracle-output
-  * ordering, not operator shape).
+  * Counts are exact: [[SparkSpec]] fixes local[4] and 4 shuffle
+  * partitions, so they do not depend on the host, and AQE — whose
+  * re-planning depends on which stage finishes first — is off while
+  * they are measured. Shuffle bytes vary with the row order tasks see
+  * (q_theil_sen's pairs read 8.4 to 10.9 MB across runs), so they are
+  * held to a band.
   */
 class PlanBudgetSpec extends SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
-  private val budgetFile =
-    new java.io.File("src/test/resources/shuffle_counts.tsv")
+  private val pinFile =
+    new java.io.File("src/test/resources/executed_work.tsv")
+  private val rows =
+    (SparkEntry.queries ++ SparkEntry.benchOnly).toSeq.sortBy(_._1)
 
-  /** The winnowed-pairs table is memoized per session
-    * (TextAnalysis.winnowPassagePairs); a consumer's plan shape depends
-    * on whether the memo is warm (checkpointed scan) or cold (full
-    * fingerprint pipeline). Warm it explicitly so every count below is
-    * measured in the same state regardless of iteration order — the
-    * recorded numbers are the warmed shape, by construction, not by the
-    * accident of q_pagerank_dupgraph sorting before text_winnow_pairs.
+  /** AQE re-plans a running query on whichever query stage finishes
+    * first, so two runs of one plan can differ by a job (over ten warm
+    * runs each, q_pagerank_dupgraph read 27 or 28 jobs, and with AQE's
+    * runtime broadcast conversion off q_concurrent_sessions still read
+    * 20 or 21). The pin measures the static plan: AQE off, so jobs are
+    * the driver's actions and stages the plan's stages.
     */
-  private def warmMemos(): Unit =
-    operators.TextAnalysis.winnowPassagePairs(spark, dir)
+  private val adaptive = "spark.sql.adaptive.enabled"
 
-  private def currentCounts(): Seq[(String, Int)] = {
-    warmMemos()
-    (SparkEntry.queries ++ SparkEntry.benchOnly).toSeq.sortBy(_._1).map { case (name, fn) =>
-      val p = fn(spark, dir).queryExecution.executedPlan.toString
-      name -> (p.split("Exchange hashpartitioning").length - 1)
-    }
+  /** The work of building `df` (construction jobs included) and writing it. */
+  private def run(df: => DataFrame): Profile = {
+    spark.conf.set(adaptive, "false")
+    try Profile(spark)(df.write.format("noop").mode("overwrite").save())._2
+    finally spark.conf.unset(adaptive) // SparkSpec leaves it at Spark's default
   }
 
-  test("hash-shuffle count per query matches the recorded budget") {
-    val actual = currentCounts()
-    if (sys.env.contains("GRAFT_UPDATE_PLAN_BUDGET")) {
-      budgetFile.getParentFile.mkdirs()
-      val w = new java.io.PrintWriter(budgetFile, "UTF-8")
-      try actual.foreach { case (n, c) => w.println(s"$n\t$c") }
-      finally w.close()
-      info(s"recorded ${actual.size} budgets to $budgetFile")
-    } else {
-      assert(budgetFile.exists(),
-        s"missing $budgetFile — run GRAFT_UPDATE_PLAN_BUDGET=1 sbt 'testOnly graft.PlanBudgetSpec'")
-      val recorded = scala.io.Source.fromFile(budgetFile, "UTF-8").getLines()
-        .filter(_.nonEmpty).map { l =>
-          val Array(n, c) = l.split("\t"); n -> c.toInt
-        }.toMap
-      val diffs = actual.flatMap { case (n, c) =>
-        recorded.get(n) match {
-          case Some(r) if r == c => None
-          case Some(r) => Some(s"$n: recorded $r, now $c")
-          case None => Some(s"$n: NEW query, no recorded budget")
-        }
+  /** Shuffle bytes may move by half, or by 4 KiB on small rows. */
+  private def inBand(recorded: Long, now: Long): Boolean =
+    math.abs(now - recorded) <= math.max(recorded / 2, 4096L)
+
+  /** Every row built once, in name order; returns the rows whose
+    * optimized plan holds a single-partition global window. Building a
+    * row builds the memos it reads, so the work pinned below is each
+    * row's warm work whatever other suites ran first in this JVM.
+    */
+  private lazy val windowOffenders: Seq[String] = rows.flatMap { case (name, fn) =>
+    fn(spark, dir).queryExecution.optimizedPlan
+      .collectWithSubqueries {
+        case w: org.apache.spark.sql.catalyst.plans.logical.Window
+            if w.partitionSpec.isEmpty =>
+          w.windowExpressions.map(_.sql).mkString(", ")
       }
-      val stale = recorded.keySet -- actual.map(_._1).toSet
-      assert(diffs.isEmpty && stale.isEmpty,
-        ("shuffle budget drift:" +: (diffs ++ stale.map(n => s"$n: query removed")))
-          .mkString("\n  "))
-    }
+      .map(w => s"$name: Window[$w] with empty partition spec")
   }
 
   test("no query plans a single-partition global window") {
@@ -77,17 +73,41 @@ class PlanBudgetSpec extends SparkSpec {
     // orders must go through Ranks.global / Ranks.boundedRank instead;
     // this guard turns the runtime warning into a build failure for
     // the whole registered surface.
-    warmMemos()
-    val offenders = (SparkEntry.queries ++ SparkEntry.benchOnly).toSeq
-      .sortBy(_._1).flatMap { case (name, fn) =>
-        val windows = fn(spark, dir).queryExecution.optimizedPlan
-          .collectWithSubqueries {
-            case w: org.apache.spark.sql.catalyst.plans.logical.Window
-                if w.partitionSpec.isEmpty =>
-              w.windowExpressions.map(_.sql).mkString(", ")
-          }
-        windows.map(w => s"$name: Window[$w] with empty partition spec")
+    assert(windowOffenders.isEmpty, windowOffenders.mkString("\n  "))
+  }
+
+  test("hash-shuffle count per query matches the recorded budget") {
+    val _ = windowOffenders // every row built once: memos warm
+    val actual = rows.map { case (name, fn) => name -> run(fn(spark, dir)) }
+    if (sys.env.contains("GRAFT_UPDATE_PLAN_BUDGET")) {
+      pinFile.getParentFile.mkdirs()
+      val w = new java.io.PrintWriter(pinFile, "UTF-8")
+      try actual.foreach { case (n, p) =>
+        w.println(Seq(n, p.jobs, p.stages, p.shuffleStages, p.shuffleBytes).mkString("\t"))
+      } finally w.close()
+      info(s"recorded ${actual.size} pins to $pinFile")
+    } else {
+      assert(pinFile.exists(),
+        s"missing $pinFile — run GRAFT_UPDATE_PLAN_BUDGET=1 sbt 'testOnly graft.PlanBudgetSpec'")
+      val recorded = scala.io.Source.fromFile(pinFile, "UTF-8").getLines()
+        .filter(_.nonEmpty).map { l =>
+          val Array(n, j, s, sh, b) = l.split("\t")
+          n -> ((j.toInt, s.toInt, sh.toInt), b.toLong)
+        }.toMap
+      val diffs = actual.flatMap { case (n, p) =>
+        val counts = (p.jobs, p.stages, p.shuffleStages)
+        recorded.get(n) match {
+          case Some((c, b)) if c == counts && inBand(b, p.shuffleBytes) => None
+          case Some((c, b)) =>
+            Some(s"$n: recorded (jobs, stages, shuffles) $c and $b shuffle bytes, " +
+              s"now $counts and ${p.shuffleBytes}")
+          case None => Some(s"$n: NEW query, no recorded pin")
+        }
       }
-    assert(offenders.isEmpty, offenders.mkString("\n  "))
+      val stale = recorded.keySet -- actual.map(_._1).toSet
+      assert(diffs.isEmpty && stale.isEmpty,
+        ("executed work drift:" +: (diffs ++ stale.map(n => s"$n: query removed")))
+          .mkString("\n  "))
+    }
   }
 }

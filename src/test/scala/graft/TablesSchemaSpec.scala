@@ -1,12 +1,8 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import graft.sources.CorpusIngest
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.bridge
 import org.apache.spark.sql.types._
 
 /** [[Tables]] reads a table's schema from one data file's footer on the
@@ -24,25 +20,8 @@ class TablesSchemaSpec extends SparkSpec {
     * nothing else running in the JVM is counted).
     */
   private def jobsOf[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val group = s"tables-schema-${System.nanoTime()}"
-    val jobs = new AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          jobs.incrementAndGet()
-    }
-    bridge.drainListenerBus(sc, 10000)
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "TablesSchemaSpec")
-    try {
-      val out = body
-      bridge.drainListenerBus(sc, 10000)
-      (out, jobs.get)
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
+    val (out, p) = Profile(spark)(body)
+    (out, p.jobs)
   }
 
   /** What `spark.read.parquet` infers, with the `events.ts` fix-ups

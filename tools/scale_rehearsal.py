@@ -11,13 +11,13 @@ scaling-slope report:
 
 Usage:
   python3 tools/scale_rehearsal.py reports/scaling_slope_r16.txt q1 q2 ...
-  # with no query args: the top-10 committed floors
-  python3 tools/scale_rehearsal.py reports/scaling_slope_r16.txt
 
-Exit 1 if any slope exceeds SLOPE_BAR (adjudicate in the round report:
-a deliberate linear row — e.g. a full-corpus ADC join — is fine, an
-accidental one is the bug this gate exists to catch). Run it for every
-NEW row of the round plus the top floors, per the standing mandate.
+At least one query name is required; with none the script prints this
+usage and exits 2. Exit 1 if any slope exceeds SLOPE_BAR (adjudicate in
+the round report: a deliberate linear row — e.g. a full-corpus ADC join
+— is fine, an accidental one is the bug this gate exists to catch).
+Run it for every NEW row of the round plus the heaviest rows of the
+latest Bench capture.
 
 Environment: SPARK_GRAFT_BASE (default /root/testdata/sf0.1),
 SPARK_GRAFT_X10 (default /root/repo/scale10), SPARK_GRAFT_CPUS
@@ -34,8 +34,6 @@ import subprocess
 import sys
 
 SLOPE_BAR = 0.9
-BUDGET = os.path.join(os.path.dirname(__file__), "..",
-                      "src", "main", "resources", "bench_budget.tsv")
 
 
 def time_queries(sf_dir, names, reps):
@@ -64,18 +62,11 @@ def time_queries(sf_dir, names, reps):
     return times
 
 
-def top_floors(n=10):
-    rows = []
-    for line in open(BUDGET):
-        name, t = line.strip().split("\t")
-        rows.append((float(t), name))
-    return [name for _, name in sorted(rows, reverse=True)[:n]]
-
-
 def main(argv):
+    if len(argv) < 3:
+        sys.stderr.write(__doc__)
+        return 2
     report, names = argv[1], argv[2:]
-    if not names:
-        names = top_floors()
     base = os.environ.get("SPARK_GRAFT_BASE", "/root/testdata/sf0.1")
     x10 = os.environ.get("SPARK_GRAFT_X10", "/root/repo/scale10")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "4 (LocalSession default)")
