@@ -2,8 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The local session the mains ([[Bench]], [[TimeQuery]], [[Verify]],
-  * [[Explain]], the example pipelines and [[tools.ScaleGen]]) run under: `local[SPARK_GRAFT_CPUS]` (default 4), that
+/** The local session every main ([[Bench]], [[TimeQuery]], [[Verify]],
+  * [[Explain]], the example pipelines, [[tools.ScaleGen]] and
+  * [[tools.HotLineGen]]) runs under: `local[SPARK_GRAFT_CPUS]` (default 4), that
   * many shuffle partitions unless the caller widens them, AQE on, UTC,
   * no UI.
   */

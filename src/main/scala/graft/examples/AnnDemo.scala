@@ -1,7 +1,6 @@
 package graft.examples
 
 import graft.operators.{IvfPq, Pq, Similarity}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** End-to-end similarity-search walkthrough — the ANN counterpart to
@@ -18,14 +17,7 @@ object AnnDemo {
 
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-ann-demo")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession("WARN")
 
     val n = graft.Tables(spark, dir, "embeddings").count()
     val cells = Similarity.trainedCentroids(spark, dir)

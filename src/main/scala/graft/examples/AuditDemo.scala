@@ -1,7 +1,6 @@
 package graft.examples
 
 import graft.operators.{Behavior, Manifest, Sampling, Sketches, TextAnalysis}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** End-to-end corpus release audit — the report a data-release process
@@ -19,13 +18,7 @@ object AuditDemo {
 
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.LocalSession("ERROR")
 
     val manifest = Manifest.datasetManifest(spark, dir).collect()
     println(s"[demo] manifest: ${manifest.length} tables; " +

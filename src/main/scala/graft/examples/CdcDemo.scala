@@ -3,7 +3,6 @@ package graft.examples
 import graft.operators.{MvTransform, VersionedUpsert}
 import graft.sources.{ChangeLog, WorkloadFixture}
 import graft.streaming.CdcPipeline
-import org.apache.spark.sql.SparkSession
 
 /** Runnable end-to-end demo of the CDC engine: replays the reference's
   * documented workload (`/root/reference/README.md:142-305`) over the
@@ -18,14 +17,7 @@ object CdcDemo {
   def main(args: Array[String]): Unit = {
     val root = args.headOption.getOrElse(
       java.nio.file.Files.createTempDirectory("graft-demo").toString)
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-cdc-demo")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession("WARN")
 
     // 1. change events → schemaless JSON wire form → landed as files
     //    (stand-in for the Kafka topic; same envelope either way)

@@ -2,7 +2,6 @@ package graft.examples
 
 import graft.operators.{Dedup, TextAnalysis}
 import graft.sources.CorpusIngest
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
@@ -47,14 +46,7 @@ object DedupDemo {
   def main(args: Array[String]): Unit = {
     val root = args.headOption.getOrElse(
       java.nio.file.Files.createTempDirectory("graft-dedup-demo").toString)
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-dedup-demo")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession("WARN")
     import spark.implicits._
 
     // 1. land raw JSONL, ingest with the DECLARED schema, quarantine

@@ -1,7 +1,6 @@
 package graft.examples
 
 import graft.operators.Multimodal
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** End-to-end multimodal curation pass — what an image/audio/video
@@ -20,13 +19,7 @@ object MediaDemo {
 
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.LocalSession("ERROR")
 
     val hashes = Multimodal.dhashIndex(spark, dir).collect()
     println(s"[demo] dhash index: ${hashes.length} images hashed " +

@@ -1,17 +1,20 @@
 package graft.examples
 
-import graft.{ModelStore, SparkEntry, Tables}
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
+import graft.{LocalSession, ModelStore, SparkEntry, Tables}
 
 /** End-to-end persistent-artifact lifecycle — the train → save →
   * reload → install → serve loop a production deployment runs across
   * process restarts, over every trained family the engine serves:
-  * IVF centroids, PQ K=256 codebook, BPE merges + segmentation,
-  * perceptron weights, Bloom bitmap, DSIR domain model, anomaly
-  * baseline. Each line reports the round-trip (structural equality)
-  * and a reloaded-serving parity check against the in-memory path —
-  * the bit-equal contract ModelStoreSpec pins per family.
+  * IVF centroids, PQ K=256 codebook, OPQ rotation, BPE merges +
+  * segmentation, perceptron weights, Bloom bitmap, DSIR domain model,
+  * anomaly baseline, and the HDR/HLL/CMS sketch states. Every family
+  * goes through the same three calls over its [[ModelStore.Family]]
+  * declaration — `save`, `load` (stamp-validated) and, for the models
+  * served from a memo slot, `install`; BPE installs through
+  * `BpeTrainer.installModel`, whose slots are session-scoped. Each
+  * line reports the round-trip (structural equality) and a
+  * reloaded-serving parity check against the in-memory path — the
+  * bit-equal contract ModelStoreSpec pins per family.
   *
   *   sbt "runMain graft.examples.StoreDemo [storeDir [dataDir]]"
   */
@@ -21,25 +24,23 @@ object StoreDemo {
     val store = args.headOption.getOrElse(
       java.nio.file.Files.createTempDirectory("graft-store").toString)
     val dir = args.lift(1).getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession("ERROR")
     import graft.operators.{Behavior, BpeTrainer, Dedup, Dsir, Perceptron, Pq, Similarity}
     import spark.implicits._
 
     def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
       df.collect().map(_.toString).toSeq
+    // save, then reload stamp-validated against the same dataset
+    def roundTrip[V](family: ModelStore.Family[V], name: String, v: V): V = {
+      ModelStore.save(spark, s"$store/$name", family, dir, v)
+      ModelStore.load(spark, s"$store/$name", family, dir)
+    }
 
     // IVF
     val ivf = Similarity.trainedCentroids(spark, dir)
     val ivfBase = rows(SparkEntry.queries("ann_ivf")(spark, dir))
-    ModelStore.saveIvf(spark, s"$store/ivf", dir, ivf)
-    val ivfL = ModelStore.loadIvf(spark, s"$store/ivf", dir)
-    ModelStore.installIvf(dir, ivfL)
+    val ivfL = roundTrip(ModelStore.ivf, "ivf", ivf)
+    ModelStore.install(ModelStore.ivf, dir, ivfL)
     println(s"[demo] ivf: ${ivfL.length} centroids round-trip=" +
       s"${ivfL == ivf} serve-parity=" +
       s"${rows(SparkEntry.queries("ann_ivf")(spark, dir)) == ivfBase}")
@@ -47,18 +48,16 @@ object StoreDemo {
     // PQ K=256
     val k = Pq.productionCodebookSize
     val pq = Pq.trainedCodebook(spark, dir, k)
-    ModelStore.savePq(spark, s"$store/pq", dir, k, pq)
-    val pqL = ModelStore.loadPq(spark, s"$store/pq", dir, k)
-    ModelStore.installPq(dir, k, pqL)
+    val pqL = roundTrip(ModelStore.pq(k), "pq", pq)
+    ModelStore.install(ModelStore.pq(k), dir, pqL)
     println(s"[demo] pq: K=$k ${pqL.length} codewords round-trip=${pqL == pq}")
 
     // OPQ rotation (exact-integer micros — round-trip exact by
     // construction; the regime flag rides along)
     val opq = graft.operators.Opq.trainedRotation(spark, dir)
     val opqBase = rows(SparkEntry.queries("opq_rotation")(spark, dir))
-    ModelStore.saveOpq(spark, s"$store/opq", dir, opq)
-    val opqL = ModelStore.loadOpq(spark, s"$store/opq", dir)
-    ModelStore.installOpq(dir, opqL)
+    val opqL = roundTrip(ModelStore.opq, "opq", opq)
+    ModelStore.install(ModelStore.opq, dir, opqL)
     println(s"[demo] opq: ${opqL.dims.length}-dim rotation " +
       s"regime=${if (opqL.exact) "closed-form" else "iterative"} " +
       s"round-trip=${opqL.lams.sameElements(opq.lams)} serve-parity=" +
@@ -71,27 +70,23 @@ object StoreDemo {
       .as[(Long, String, String, String, Long)].collect().toSeq
     val encBase = rows(SparkEntry.queries("text_bpe_encode")(spark, dir))
     val seg = BpeTrainer.segmentation(spark, dir)
-    ModelStore.saveBpeMerges(spark, s"$store/bpe-m", dir, merges, gate, mergeRows)
-    ModelStore.saveBpeSegmentation(spark, s"$store/bpe-s", dir, merges, gate, seg)
-    val mergesL = ModelStore.loadBpeMerges(spark, s"$store/bpe-m", dir, merges, gate)
-    val segL = ModelStore.loadBpeSegmentation(spark, s"$store/bpe-s", dir, merges, gate)
-    ModelStore.installBpe(spark, dir, merges, gate, mergesL, segL)
+    val mergesL = roundTrip(ModelStore.bpeMerges(merges, gate), "bpe-m", mergeRows)
+    val segL = roundTrip(ModelStore.bpeSegmentation(merges, gate), "bpe-s", seg)
+    BpeTrainer.installModel(spark, dir, merges, gate, mergesL, segL)
     println(s"[demo] bpe: ${mergesL.length} merges round-trip=" +
       s"${mergesL == mergeRows} encode-parity=" +
       s"${rows(SparkEntry.queries("text_bpe_encode")(spark, dir)) == encBase}")
 
     // Perceptron
     val w = Perceptron.trainedWeights(spark, dir)
-    ModelStore.savePerceptron(spark, s"$store/perceptron", dir, w)
-    val wL = ModelStore.loadPerceptron(spark, s"$store/perceptron", dir)
-    ModelStore.installPerceptron(dir, wL)
+    val wL = roundTrip(ModelStore.perceptron, "perceptron", w)
+    ModelStore.install(ModelStore.perceptron, dir, wL)
     println(s"[demo] perceptron: ${wL.length} weights round-trip=" +
       s"${wL.toSeq == w.toSeq}")
 
     // Bloom
     val (m, words) = Dedup.bloomArtifact(spark, dir)
-    ModelStore.saveBloom(spark, s"$store/bloom", dir, m, words)
-    val (mL, wordsL) = ModelStore.loadBloom(spark, s"$store/bloom", dir)
+    val (mL, wordsL) = roundTrip(ModelStore.bloom, "bloom", (m, words))
     val docs = Tables(spark, dir, "documents").select("doc_id", "text")
     val gateParity =
       rows(graft.streaming.StreamingDedup.maybeDupStream(docs, mL, wordsL)
@@ -103,8 +98,7 @@ object StoreDemo {
 
     // DSIR
     val dsir = Dsir.trainedWeights(spark, dir)
-    ModelStore.saveDsir(spark, s"$store/dsir", dir, dsir)
-    val dsirL = ModelStore.loadDsir(spark, s"$store/dsir", dir)
+    val dsirL = roundTrip(ModelStore.dsir, "dsir", dsir)
     val dsirParity = rows(Dsir.streamingScores(docs, dsirL).orderBy("doc_id")) ==
       rows(Dsir.streamingScores(docs, dsir).orderBy("doc_id"))
     println(s"[demo] dsir: ${dsirL.count(_ != 0L)} live buckets round-trip=" +
@@ -112,8 +106,7 @@ object StoreDemo {
 
     // Anomaly baseline
     val base = Behavior.anomalyBaseline(spark, dir).localCheckpoint(true)
-    ModelStore.saveAnomalyBaseline(spark, s"$store/anomaly", dir, base)
-    val baseL = ModelStore.loadAnomalyBaseline(spark, s"$store/anomaly", dir)
+    val baseL = roundTrip(ModelStore.anomalyBaseline, "anomaly", base)
     val events = Tables(spark, dir, "events")
     val monParity =
       rows(Behavior.streamingAnomalies(events, baseL)
@@ -125,7 +118,7 @@ object StoreDemo {
 
     // HDR sketch cells: persisted nightly base + fresh delta slice
     import graft.operators.Sketches
-    ModelStore.saveHdrCells(spark, s"$store/hdr", dir, "base",
+    ModelStore.save(spark, s"$store/hdr", ModelStore.hdrCells("base"), dir,
       Sketches.hdrCellsOf(spark, dir, Sketches.hdrBaseSide))
     val hdrParity =
       rows(Sketches.hdrQuantilesServed(spark, dir, s"$store/hdr")) ==
@@ -134,7 +127,7 @@ object StoreDemo {
       s"$hdrParity")
 
     // HLL daily registers: persisted base MAX-merged with the delta
-    ModelStore.saveHllDailyRegs(spark, s"$store/hll", dir, "base",
+    ModelStore.save(spark, s"$store/hll", ModelStore.hllDailyRegs("base"), dir,
       Sketches.hllDailyRegsOf(spark, dir, Sketches.hllBaseSide))
     val hllParity =
       rows(Sketches.hllDailyServed(spark, dir, s"$store/hll")) ==
@@ -143,7 +136,7 @@ object StoreDemo {
       s"$hllParity")
 
     // CMS cells: persisted base summed keyed with the delta batch
-    ModelStore.saveCmsCells(spark, s"$store/cms", dir, "base",
+    ModelStore.save(spark, s"$store/cms", ModelStore.cmsCells("base"), dir,
       Sketches.cmsCellsOf(spark, dir, Sketches.cmsBaseSide))
     val cmsParity =
       rows(Sketches.cmsTokenCountsServed(spark, dir, s"$store/cms")) ==
@@ -152,8 +145,9 @@ object StoreDemo {
       s"$cmsParity")
 
     // staleness: the stamp refuses an artifact for a different dataset
+    val foreign = java.nio.file.Files.createTempDirectory("graft-foreign").toString
     val refused =
-      try { ModelStore.loadIvf(spark, s"$store/ivf", "/root/testdata/sf0.01"); false }
+      try { ModelStore.load(spark, s"$store/ivf", ModelStore.ivf, foreign); false }
       catch { case _: IllegalArgumentException => true }
     println(s"[demo] staleness gate refuses a foreign dataset: $refused")
 

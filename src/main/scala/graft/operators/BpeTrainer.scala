@@ -176,29 +176,6 @@ object BpeTrainer {
     (learned.toSeq, syms)
   }
 
-  /** Left-to-right, non-overlapping application of merge (a, b) to a
-    * symbol array — the classic BPE scan ("aaa" + (a,a) → ["aa","a"]) —
-    * as a pure `aggregate` fold with (accumulated, pending) state.
-    * Interpreted HOF, but per WORD TYPE per round, not per token.
-    */
-  private[operators] def applyMerge(sym: Column, a: String, b: String): Column = {
-    val emptyAcc = array().cast("array<string>")
-    val noPend = lit(null).cast("string")
-    aggregate(
-      sym,
-      struct(emptyAcc.as("acc"), noPend.as("pend")),
-      (st, x) => {
-        val acc = st.getField("acc")
-        val pend = st.getField("pend")
-        when(pend.isNull, struct(acc.as("acc"), x.as("pend")))
-          .when(pend === lit(a) && x === lit(b),
-            struct(concat(acc, array(lit(a + b))).as("acc"), noPend.as("pend")))
-          .otherwise(struct(concat(acc, array(pend)).as("acc"), x.as("pend")))
-      },
-      st => when(st.getField("pend").isNull, st.getField("acc"))
-        .otherwise(concat(st.getField("acc"), array(st.getField("pend")))))
-  }
-
   /** The longest serially-faithful batch from one round's pair counts,
     * given the top-K pair rows in serial-argmax order (n desc, left,
     * right) and the current full symbol vocabulary.

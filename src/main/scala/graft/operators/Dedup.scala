@@ -101,6 +101,16 @@ object Dedup {
     md5(concat((b * rowsPerBand until (b + 1) * rowsPerBand)
       .map(j => col(s"h$j")): _*).cast("binary")).as(s"b$b")
 
+  /** md5 band key over the affine (wide) signature's rows for band `b`
+    * of `rows` values: the '_' separator is REQUIRED here — the wide
+    * signature values are variable-width decimal bigints ('1_23' vs
+    * '12_3' must differ) — and keeps full 128-bit key cardinality, so
+    * bucket population stays O(dup-group size).
+    */
+  private def wideBandKey(b: Int, rows: Int): Column =
+    md5(concat_ws("_", (b * rows until (b + 1) * rows)
+      .map(j => col(s"h$j").cast("string")): _*).cast("binary")).as(s"b$b")
+
   /** (doc_id, b0..b{n-1}) → long (doc_id, band, key) band table — the
     * shared explode step of every LSH variant. ONE posexplode pass:
     * the historical union-of-per-band-selects existed to manufacture
@@ -129,15 +139,24 @@ object Dedup {
         .localCheckpoint(),
       numBands)
 
-  private[operators] def lshPairsUnsorted(spark: SparkSession, dir: String): DataFrame = {
-    val bands = narrowBands(spark, dir)
+  /** The band→bucket self-join every LSH variant runs: one (a_id,
+    * b_id, band) row per band on which two documents' keys collide,
+    * a_id < b_id.
+    */
+  private def bandCollisions(bands: DataFrame): DataFrame =
     bands.as("a")
       .join(bands.as("b"),
         col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
-        col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"))
-      .distinct()
-  }
+          col("a.doc_id") < col("b.doc_id"))
+      .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"),
+        col("a.band").as("band"))
+
+  /** Candidate pairs: documents colliding on at least one band. */
+  private def bandPairs(bands: DataFrame): DataFrame =
+    bandCollisions(bands).select("a_id", "b_id").distinct()
+
+  private[operators] def lshPairsUnsorted(spark: SparkSession, dir: String): DataFrame =
+    bandPairs(narrowBands(spark, dir))
 
   /** Production-width MinHash: k = b×r = 64 hash functions — the width
     * real near-dup dedup runs at (collision threshold (1/b)^(1/r) =
@@ -186,25 +205,14 @@ object Dedup {
     * population stays O(dup-group size). Identical band→bucket-join
     * scale shape as [[lshCandidatePairs]], at production width.
     */
-  def lshWideCandidatePairs(spark: SparkSession, dir: String): DataFrame = {
-    // '_' separator is REQUIRED here: the wide signature values are
-    // variable-width decimal bigints ('1_23' vs '12_3' must differ)
-    val bandKey = (b: Int) =>
-      md5(concat_ws("_", (b * wideRowsPerBand until (b + 1) * wideRowsPerBand)
-        .map(j => col(s"h$j").cast("string")): _*).cast("binary")).as(s"b$b")
-    val bands = bandTable(
+  def lshWideCandidatePairs(spark: SparkSession, dir: String): DataFrame =
+    bandPairs(bandTable(
       wideSignaturesUnsorted(spark, dir)
-        .select(col("doc_id") +: (0 until wideNumBands).map(bandKey): _*)
+        .select(col("doc_id") +: (0 until wideNumBands)
+          .map(wideBandKey(_, wideRowsPerBand)): _*)
         .localCheckpoint(),
-      wideNumBands)
-    bands.as("a")
-      .join(bands.as("b"),
-        col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"))
-      .distinct()
+      wideNumBands))
       .orderBy("a_id", "b_id")
-  }
 
   /** Incremental LSH dedup — the daily-ingest shape: candidate pairs of
     * a NEW batch (every 10th doc here) against the EXISTING corpus
@@ -1184,20 +1192,9 @@ object Dedup {
     * every geometry bands the SAME signatures.
     */
   private def lshPairsForGeometry(sigs: DataFrame, numBands: Int,
-                                  rowsPerBand: Int): DataFrame = {
-    val bandKey = (b: Int) =>
-      md5(concat_ws("_", (b * rowsPerBand until (b + 1) * rowsPerBand)
-        .map(j => col(s"h$j").cast("string")): _*).cast("binary")).as(s"b$b")
-    val bands = bandTable(
-      sigs.select(col("doc_id") +: (0 until numBands).map(bandKey): _*),
-      numBands)
-    bands.as("a")
-      .join(bands.as("b"),
-        col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"))
-      .distinct()
-  }
+                                  rowsPerBand: Int): DataFrame =
+    bandPairs(bandTable(sigs.select(col("doc_id") +: (0 until numBands)
+      .map(wideBandKey(_, rowsPerBand)): _*), numBands))
 
   /** Band-geometry SWEEP of the blocking-quality report — the
     * recall/cost lever the LSH index actually tunes, driver-visible
@@ -1240,18 +1237,8 @@ object Dedup {
       b * r == fineB * fineR && fineB % b == 0 &&
         java.lang.Integer.bitCount(fineB / b) == 1 },
       "sweep geometries must be power-of-two splits of one signature")
-    val bandKey = (b: Int) =>
-      md5(concat_ws("_", (b * fineR until (b + 1) * fineR)
-        .map(j => col(s"h$j").cast("string")): _*).cast("binary")).as(s"b$b")
-    val bands = bandTable(
-      sigs.select(col("doc_id") +: (0 until fineB).map(bandKey): _*),
-      fineB)
-    val masks = bands.as("a")
-      .join(bands.as("b"),
-        col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"),
-        col("a.band").as("band"))
+    val masks = bandCollisions(bandTable(sigs.select(col("doc_id") +:
+        (0 until fineB).map(wideBandKey(_, fineR)): _*), fineB))
       .groupBy("a_id", "b_id")
       .agg(expr("bit_or(shiftleft(CAST(1 AS BIGINT), band))").as("mask"))
       .localCheckpoint() // feeds the candidate AND caught counts

@@ -133,19 +133,6 @@ object Fuzzy {
     */
   val maxBroadcastNames = 200000L
 
-  /** Size-guarded broadcast: hint `df` for broadcast only when its
-    * measured row count is under the budget — otherwise hint a
-    * SHUFFLED HASH join (not the bare default: Catalyst would pick
-    * sort-merge, paying a sort on the huge probe side; and at small
-    * test scales it would auto-broadcast under
-    * `autoBroadcastJoinThreshold`, hiding the fallback shape the spec
-    * needs to certify). Both shapes are row-identical by construction
-    * — the join is the same equi-join either way (FuzzyEvalSpec pins
-    * it; PlanSpec pins the shape switch at a forced threshold).
-    */
-  private def guarded(df: DataFrame, rows: Long, maxRows: Long): DataFrame =
-    if (rows <= maxRows) broadcast(df) else df.hint("shuffle_hash")
-
   /** Incremental τ = 2 join (`q_fuzzy_names_incr`) — the nightly
     * entity-resolution delta: ONLY pairs with the new batch
     * (c_custkey % 10 = 0, the engine's standing delta convention) on
@@ -222,7 +209,7 @@ object Fuzzy {
     // (the base is the 100 TB side); past the budget, both sides
     // shuffle once into a hash join — still never sorted, still
     // never base × base
-    guarded(d, deltaForms, maxForms).join(b, Seq("h")).filter(gapOk)
+    Ranks.guarded(d, deltaForms, maxForms).join(b, Seq("h")).filter(gapOk)
       .select("new_id", "existing_id")
       // width-pinned repartition on the distinct's own keys: replaces
       // the agg exchange (same clustering) and is exempt from AQE
@@ -232,9 +219,9 @@ object Fuzzy {
       .repartition(spark.conf.get("spark.sql.shuffle.partitions").toInt,
         col("new_id"), col("existing_id"))
       .distinct()
-      .join(guarded(nmAll.select(col("id").as("new_id"),
+      .join(Ranks.guarded(nmAll.select(col("id").as("new_id"),
         col("name").as("n1")), nNames, maxNames), Seq("new_id"))
-      .join(guarded(nmAll.select(col("id").as("existing_id"),
+      .join(Ranks.guarded(nmAll.select(col("id").as("existing_id"),
         col("name").as("n2")), nNames, maxNames), Seq("existing_id"))
       .withColumn("dist",
         levenshtein(col("n1"), col("n2"), tau2).cast("long")) // banded DP
@@ -429,11 +416,11 @@ object Fuzzy {
     val f2 = forms.filter(col("nd") === 2)
       .select(xxhash64(col("h"), col("g1"), col("g2")).as("h22"), col("id"))
     val j22 = f2.select(col("h22"), col("id").as("id1"))
-      .join(guarded(f2.select(col("h22"), col("id").as("id2")),
+      .join(Ranks.guarded(f2.select(col("h22"), col("id").as("id2")),
         forms2Count, maxForms), Seq("h22"))
       .filter(col("id1") < col("id2"))
       .select("id1", "id2")
-    val jle1 = guarded(forms.filter(col("nd") <= 1)
+    val jle1 = Ranks.guarded(forms.filter(col("nd") <= 1)
       .select(col("h"), col("id").as("ida"), col("g1").as("ag1"),
         col("nd").as("na")), formsLe1Count, maxForms)
       .join(forms.select(col("h"), col("id").as("idb"),
@@ -469,9 +456,9 @@ object Fuzzy {
     // strings re-attach afterward — broadcast under the measured
     // budget, shuffled hash join on the id past it)
     candidates2(spark, dir, maxForms)
-      .join(guarded(nm.select(col("id").as("id1"), col("name").as("n1")),
+      .join(Ranks.guarded(nm.select(col("id").as("id1"), col("name").as("n1")),
         nNames, maxNames), Seq("id1"))
-      .join(guarded(nm.select(col("id").as("id2"), col("name").as("n2")),
+      .join(Ranks.guarded(nm.select(col("id").as("id2"), col("name").as("n2")),
         nNames, maxNames), Seq("id2"))
       .withColumn("dist",
         levenshtein(col("n1"), col("n2"), tau2).cast("long")) // banded DP
@@ -507,9 +494,9 @@ object Fuzzy {
       .filter(length(col("name")) >= 2)
     val nNames = nm.count()
     val stats = candidates2(spark, dir)
-      .join(guarded(nm.select(col("id").as("id1"), col("name").as("n1")),
+      .join(Ranks.guarded(nm.select(col("id").as("id1"), col("name").as("n1")),
         nNames, maxBroadcastNames), Seq("id1"))
-      .join(guarded(nm.select(col("id").as("id2"), col("name").as("n2")),
+      .join(Ranks.guarded(nm.select(col("id").as("id2"), col("name").as("n2")),
         nNames, maxBroadcastNames), Seq("id2"))
       .agg(count(lit(1)).as("n_candidate_pairs"),
         coalesce(sum(when(levenshtein(col("n1"), col("n2"), tau2) >= 0, 1L)

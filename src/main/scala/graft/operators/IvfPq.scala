@@ -1,7 +1,8 @@
 package graft.operators
 
 import graft.Tables
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.functions.DotProductD
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** IVF-PQ — the combined index both halves were built for: the trained
@@ -27,9 +28,6 @@ import org.apache.spark.sql.functions._
   */
 object IvfPq {
 
-  private def dot(a: Column, b: Column): Column =
-    graft.functions.DotProductD(a, b)
-
   /** Rank-3 recall of IVF-probed, ADC-scored, exactly re-ranked search
     * vs exact L2 over the sampled queries; `recall_adc` isolates the
     * compressed-domain stage, `recall` the full two-stage pipeline.
@@ -39,7 +37,8 @@ object IvfPq {
     */
   def ivfPqRecall(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables(spark, dir, "embeddings")
-    val withNrm = emb.withColumn("nrm", sqrt(dot(col("embedding"), col("embedding"))))
+    val withNrm = emb
+      .withColumn("nrm", sqrt(DotProductD(col("embedding"), col("embedding"))))
     // stage 0: trained coarse cells (memoized); codebook comes from the
     // shared helper's own memoized training
     import spark.implicits._

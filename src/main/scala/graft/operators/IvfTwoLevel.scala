@@ -1,7 +1,8 @@
 package graft.operators
 
 import graft.Tables
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.functions.DotProductD
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -43,11 +44,8 @@ object IvfTwoLevel {
     */
   val subLloydIters = 1
 
-  private def dot(a: Column, b: Column): Column =
-    graft.functions.DotProductD(a, b)
-
   private def withSubNorm(subCents: DataFrame): DataFrame =
-    subCents.withColumn("s_nrm", sqrt(dot(col("s_emb"), col("s_emb"))))
+    subCents.withColumn("s_nrm", sqrt(DotProductD(col("s_emb"), col("s_emb"))))
 
   /** Nearest sub-centroid WITHIN the vector's coarse cell: equi-join
     * on `cell`, rounded cosine, ties to the smallest s_id — the
@@ -58,7 +56,8 @@ object IvfTwoLevel {
   private def assignSub(assigned: DataFrame, subCents: DataFrame): DataFrame =
     assigned.join(withSubNorm(subCents), "cell")
       .withColumn("s_cos",
-        round(dot(col("embedding"), col("s_emb")) / (col("nrm") * col("s_nrm")), 4))
+        round(DotProductD(col("embedding"), col("s_emb")) /
+          (col("nrm") * col("s_nrm")), 4))
       .groupBy(col("vec_id"))
       .agg(
         first(col("cell")).as("cell"),
@@ -88,7 +87,7 @@ object IvfTwoLevel {
   private[graft] def buildIndexWithCents(
       spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
     val emb = Tables(spark, dir, "embeddings")
-      .withColumn("nrm", sqrt(dot(col("embedding"), col("embedding"))))
+      .withColumn("nrm", sqrt(DotProductD(col("embedding"), col("embedding"))))
     import spark.implicits._
     val centroids = Similarity.trainedCentroids(spark, dir).toDF("c_id", "c_emb")
     val assigned = Similarity.assignCells(emb, centroids).localCheckpoint(true)
@@ -130,7 +129,7 @@ object IvfTwoLevel {
         col("cell") === col("q_cell") && col("sub") === col("q_sub") &&
           col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id"),
-        round(dot(col("q_emb"), col("embedding")) /
+        round(DotProductD(col("q_emb"), col("embedding")) /
           (col("q_nrm") * col("nrm")), 4).as("cos"))
     val w = Window.partitionBy(col("q_id"))
       .orderBy(col("cos").desc, col("vec_id"))

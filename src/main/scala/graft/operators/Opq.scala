@@ -146,24 +146,12 @@ object Opq {
     java.math.BigDecimal.valueOf(x)
       .setScale(0, java.math.RoundingMode.HALF_UP).longValueExact()
 
-  /** Memo key of the trained rotation, shared by the trainer and
-    * [[installRotation]].
-    */
-  private def rotationKey(dir: String): String =
-    graft.DataVersion.key(dir, "embeddings", "opqrot")
-
-  /** The trained rotation, memoized per dataset content version (the
-    * codebook discipline).
+  /** The trained rotation, memoized per dataset content version under
+    * the [[graft.ModelStore.opq]] stamp (the codebook discipline).
     */
   private[graft] def trainedRotation(spark: SparkSession,
       dir: String): Rotation =
-    graft.Memo(rotationKey(dir))(trainRotation(spark, dir))
-
-  /** Install a [[graft.ModelStore]]-reloaded rotation into the serving
-    * slot.
-    */
-  private[graft] def installRotation(dir: String, model: Rotation): Unit =
-    graft.Memo.install(rotationKey(dir), model)
+    graft.Memo(graft.ModelStore.opq.stamp(dir))(trainRotation(spark, dir))
 
   private[graft] def trainRotation(spark: SparkSession, dir: String): Rotation = {
     import spark.implicits._

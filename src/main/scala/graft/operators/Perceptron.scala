@@ -114,20 +114,16 @@ object Perceptron {
       .orderBy("doc_id")
   }
 
-  /** Memo key of the trained weight vector, shared by the trainer and
-    * [[installWeights]]. Training is deterministic (fixed epoch count,
-    * exact integer updates), so the artifact is a pure function of the
-    * dataset version — the [[Similarity]]/[[Pq]] train-once-serve-many
-    * discipline.
-    */
-  private def weightsKey(dir: String): String =
-    graft.DataVersion.key(dir, "documents", "perceptron")
-
   /** The trained weight vector alone (for specs / reuse on a stream —
     * weights ride any plan as literals like the IVF centroids do).
+    * Training is deterministic (fixed epoch count, exact integer
+    * updates), so the artifact is a pure function of the dataset
+    * version — the [[Similarity]]/[[Pq]] train-once-serve-many
+    * discipline, memoized under the [[graft.ModelStore.perceptron]]
+    * stamp.
     */
   def trainedWeights(spark: SparkSession, dir: String): Array[Long] =
-    graft.Memo(weightsKey(dir))(trainWeights(spark, dir))
+    graft.Memo(graft.ModelStore.perceptron.stamp(dir))(trainWeights(spark, dir))
 
   /** The un-memoized feature pass plus epoch loop [[trainedWeights]]
     * serves from the memo (the bench-only cold row `text_quality_train`
@@ -142,12 +138,6 @@ object Perceptron {
     w.zipWithIndex.map { case (v, i) => (i.toLong, v) }
       .toSeq.toDF("idx", "weight").orderBy("idx")
   }
-
-  /** Install a [[graft.ModelStore]]-reloaded weight vector into the
-    * serving slot.
-    */
-  private[graft] def installWeights(dir: String, w: Array[Long]): Unit =
-    graft.Memo.install(weightsKey(dir), w)
 
   /** Score a STREAM of documents with batch-trained weights — the
     * train-batch/serve-stream half of the classifier (same pattern as

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Tables
+import graft.functions.DotProductD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -53,15 +54,13 @@ object Pq {
   /** Lloyd iterations per subspace — the IVF setting. */
   val pqLloydIters = 2
 
-  private def dot(a: Column, b: Column): Column =
-    graft.functions.DotProductD(a, b)
-
   /** Rounded squared-L2 between a subvector and a centroid, from three
     * ordered-fold dots (‖a‖² − 2a·b + ‖b‖², each ascending-index) —
     * the formula the oracle mirrors term-for-term before rounding.
     */
   private[operators] def dist2(sub: Column, cent: Column): Column =
-    round(dot(sub, sub) - lit(2.0) * dot(sub, cent) + dot(cent, cent), 4)
+    round(DotProductD(sub, sub) - lit(2.0) * DotProductD(sub, cent) +
+      DotProductD(cent, cent), 4)
 
   /** (vec_id, m, sub) — one row per vector per subspace. */
   private[graft] def subspaceRows(emb: DataFrame): DataFrame = {
@@ -86,10 +85,11 @@ object Pq {
     * so assignments are bit-identical.
     */
   private[graft] def assign(sub: DataFrame, codebook: DataFrame): DataFrame =
-    sub.withColumn("aa", dot(col("sub"), col("sub")))
-      .join(broadcast(codebook.withColumn("bb", dot(col("c_emb"), col("c_emb")))), "m")
+    sub.withColumn("aa", DotProductD(col("sub"), col("sub")))
+      .join(broadcast(codebook
+        .withColumn("bb", DotProductD(col("c_emb"), col("c_emb")))), "m")
       .withColumn("d2", round(
-        col("aa") - lit(2.0) * dot(col("sub"), col("c_emb")) + col("bb"), 4))
+        col("aa") - lit(2.0) * DotProductD(col("sub"), col("c_emb")) + col("bb"), 4))
       .groupBy(col("vec_id"), col("m"))
       .agg(
         min_by(col("c_id"), struct(col("d2"), col("c_id"))).as("code"),
@@ -271,28 +271,16 @@ object Pq {
       .select(col("vec_id"), col("m"), col("code")), cbDf)
   }
 
-  /** Memo key of the trained codebook at width `k`, shared by the
-    * trainer and [[installCodebook]].
-    */
-  private def codebookKey(dir: String, k: Int): String =
-    graft.DataVersion.key(dir, "embeddings", s"pq$k")
-
   /** The trained codebook as a driver-side model artifact:
     * (subspace, centroid id, centroid) — O(K·d) doubles, memoized per
-    * (dataset dir content version, K) so a regenerated dataset
-    * retrains instead of serving a stale model.
+    * (dataset dir content version, K) under the
+    * [[graft.ModelStore.pq]] stamp, so a regenerated dataset retrains
+    * instead of serving a stale model and a store reload installs into
+    * the same slot.
     */
   def trainedCodebook(spark: SparkSession, dir: String,
       k: Int = codebookSize): Seq[(Int, Long, Seq[Double])] =
-    graft.Memo(codebookKey(dir, k))(trainCodebook(spark, dir, k))
-
-  /** Install a [[graft.ModelStore]]-reloaded codebook into the serving
-    * slot, so every PQ consumer at this K serves from the reloaded
-    * model.
-    */
-  private[graft] def installCodebook(dir: String, k: Int,
-      model: Seq[(Int, Long, Seq[Double])]): Unit =
-    graft.Memo.install(codebookKey(dir, k), model)
+    graft.Memo(graft.ModelStore.pq(k).stamp(dir))(trainCodebook(spark, dir, k))
 
   private def trainCodebook(spark: SparkSession, dir: String,
       k: Int): Seq[(Int, Long, Seq[Double])] =
@@ -707,12 +695,13 @@ object Pq {
     // self-dots hoisted out of the O(N·sample) cartesian (same
     // term-identical split as [[assign]])
     val truth = emb
-      .withColumn("aa", dot(col("embedding"), col("embedding")))
+      .withColumn("aa", DotProductD(col("embedding"), col("embedding")))
       .crossJoin(broadcast(queries
-        .withColumn("bb", dot(col("q_emb"), col("q_emb")))))
+        .withColumn("bb", DotProductD(col("q_emb"), col("q_emb")))))
       .filter(col("vec_id") =!= col("q_id"))
       .withColumn("d2", round(
-        col("aa") - lit(2.0) * dot(col("embedding"), col("q_emb")) + col("bb"), 4))
+        col("aa") - lit(2.0) * DotProductD(col("embedding"), col("q_emb")) +
+          col("bb"), 4))
       .groupBy(col("q_id"))
       .agg(min_by(col("vec_id"), struct(col("d2"), col("vec_id"))).as("true_nn"))
     truth

@@ -29,6 +29,21 @@ object Ranks {
     (cp, rows.get("n").asInstanceOf[Long])
   }
 
+  /** Size-guarded broadcast: hint `df` for broadcast only when its
+    * measured row count is under the budget — otherwise hint a
+    * SHUFFLED HASH join (not the bare default: Catalyst would pick
+    * sort-merge, paying a sort on the huge probe side; and at small
+    * test scales it would auto-broadcast under
+    * `autoBroadcastJoinThreshold`, hiding the fallback shape the spec
+    * needs to certify). Both shapes are row-identical by construction
+    * — the join is the same equi-join either way (FuzzyEvalSpec and
+    * LineDedupSpec pin it; PlanSpec pins the shape switch at a forced
+    * threshold). The count is usually [[checkpointCounted]]'s.
+    */
+  private[operators] def guarded(df: DataFrame, rows: Long,
+                                 maxRows: Long): DataFrame =
+    if (rows <= maxRows) broadcast(df) else df.hint("shuffle_hash")
+
   /** Distributed `row_number` over a total order — the classic
     * two-pass range-sort rank:
     *

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Tables
+import graft.functions.DotProductD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -23,15 +24,7 @@ import org.apache.spark.sql.functions._
   */
 object Similarity {
 
-  /** Σ aᵢ·bᵢ in double, ordered accumulation — the native codegen'd
-    * [[graft.functions.DotProductD]] expression (bit-identical to the
-    * `zip_with`+`aggregate` fold it replaces, which ran on the
-    * interpreted lambda path and dominated the pair-scoring loop).
-    */
-  private def dot(a: Column, b: Column): Column =
-    graft.functions.DotProductD(a, b)
-
-  private def norm(a: Column): Column = sqrt(dot(a, a))
+  private def norm(a: Column): Column = sqrt(DotProductD(a, a))
 
   /** Sign-bucket id from the first 6 dimensions: a 64-way coarse
     * partition (fixed pseudo-hyperplanes = coordinate axes; determinism
@@ -77,7 +70,7 @@ object Similarity {
     val scored = emb.crossJoin(broadcast(queries))
       .filter(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id"),
-        round(dot(col("q_emb"), col("embedding")) /
+        round(DotProductD(col("q_emb"), col("embedding")) /
           (col("q_nrm") * col("nrm")), 4).as("cos"))
     topPerQuery(scored, 5)
   }
@@ -96,7 +89,7 @@ object Similarity {
     val scored = emb.join(broadcast(queries),
         col("bucket") === col("q_bucket") && col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id"),
-        round(dot(col("q_emb"), col("embedding")) /
+        round(DotProductD(col("q_emb"), col("embedding")) /
           (col("q_nrm") * col("nrm")), 4).as("cos"))
     topPerQuery(scored, 3)
   }
@@ -115,7 +108,7 @@ object Similarity {
         col("embedding").as("b_emb"), col("nrm").as("b_nrm"))
     a.join(b, col("label") === col("b_label") && col("a_id") < col("b_id"))
       .select(col("a_id"), col("b_id"), col("label"),
-        round(dot(col("a_emb"), col("b_emb")) /
+        round(DotProductD(col("a_emb"), col("b_emb")) /
           (col("a_nrm") * col("b_nrm")), 4).as("cos"))
       .filter(col("cos") >= 0.25)
       .orderBy("a_id", "b_id")
@@ -157,7 +150,7 @@ object Similarity {
     val bf = emb.crossJoin(broadcast(queries))
       .filter(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id"),
-        round(dot(col("q_emb"), col("embedding")) /
+        round(DotProductD(col("q_emb"), col("embedding")) /
           (col("q_nrm") * col("nrm")), 4).as("cos"))
     // rank-1 as a map-side-combined argmax, not a window: the shuffle
     // carries one candidate per query per mapper instead of sorting
@@ -257,11 +250,12 @@ object Similarity {
     if (nprobe == 1) queries
     else {
       val cent = centroids
-        .withColumn("c_nrm", sqrt(dot(col("c_emb"), col("c_emb"))))
+        .withColumn("c_nrm", sqrt(DotProductD(col("c_emb"), col("c_emb"))))
       val second = queries.crossJoin(broadcast(cent))
         .filter(col("c_id") =!= col("q_cell"))
         .withColumn("c_cos",
-          round(dot(col("q_emb"), col("c_emb")) / (col("q_nrm") * col("c_nrm")), 4))
+          round(DotProductD(col("q_emb"), col("c_emb")) /
+            (col("q_nrm") * col("c_nrm")), 4))
         .groupBy(col("q_id"))
         .agg(max_by(col("c_id"), struct(col("c_cos"), -col("c_id"))).as("q_cell"),
           first(col("q_emb")).as("q_emb"), first(col("q_nrm")).as("q_nrm"))
@@ -277,7 +271,8 @@ object Similarity {
     * @param centroids (c_id, c_emb: array<double>)
     */
   private[graft] def assignCells(emb: DataFrame, centroids: DataFrame): DataFrame = {
-    val cent = centroids.withColumn("c_nrm", sqrt(dot(col("c_emb"), col("c_emb"))))
+    val cent = centroids
+      .withColumn("c_nrm", sqrt(DotProductD(col("c_emb"), col("c_emb"))))
     // argmax as a max_by hash aggregate, not a row_number window: the
     // partial agg collapses the k candidate rows per vector map-side,
     // so the shuffle carries one row per vector instead of k, and no
@@ -286,7 +281,8 @@ object Similarity {
     // so first() is deterministic.
     emb.crossJoin(broadcast(cent))
       .withColumn("c_cos",
-        round(dot(col("embedding"), col("c_emb")) / (col("nrm") * col("c_nrm")), 4))
+        round(DotProductD(col("embedding"), col("c_emb")) /
+          (col("nrm") * col("c_nrm")), 4))
       .groupBy(col("vec_id"))
       .agg(
         max_by(col("c_id"), struct(col("c_cos"), -col("c_id"))).as("cell"),
@@ -369,33 +365,20 @@ object Similarity {
     * learned partitions, and each probed cell holds ~√N vectors so
     * per-query work stays O(nprobe·√N) as the corpus grows.
     */
-  /** Memo key of the trained centroid artifact, shared by the trainer
-    * and [[installCentroids]]. Training is deterministic (fixed seed
-    * rule, ordered folds), so the artifact is a pure function of the
-    * dataset version — real deployments train the index ONCE and serve
-    * it: the first IVF query on a dataset pays for training, later ones
-    * (other probe settings, recall audits, streams) reuse the
-    * O(k·dims) driver-side model. Plain driver data, safe across
-    * SparkSessions.
-    */
-  private def centroidsKey(dir: String): String =
-    graft.DataVersion.key(dir, "embeddings", "ivf")
-
   /** The trained k-means centroids as a driver-side model artifact
     * (O(k·dims)) — what [[ivfTopK]] indexes with, and what
     * [[streamingCellScores]] ships into a stream as literals. See
-    * [[ivfTopK]] for the training discipline.
+    * [[ivfTopK]] for the training discipline. Training is
+    * deterministic (fixed seed rule, ordered folds), so the artifact is
+    * a pure function of the dataset version — real deployments train
+    * the index ONCE and serve it: the first IVF query on a dataset pays
+    * for training, later ones (other probe settings, recall audits,
+    * streams) reuse the memoized model, keyed by the
+    * [[graft.ModelStore.ivf]] stamp so a store reload installs into
+    * the same slot. Plain driver data, safe across SparkSessions.
     */
   def trainedCentroids(spark: SparkSession, dir: String): Seq[(Long, Seq[Double])] =
-    graft.Memo(centroidsKey(dir))(trainCentroids(spark, dir))
-
-  /** Install a [[graft.ModelStore]]-reloaded centroid artifact into
-    * the serving slot, so every IVF consumer serves from the reloaded
-    * model.
-    */
-  private[graft] def installCentroids(dir: String,
-      model: Seq[(Long, Seq[Double])]): Unit =
-    graft.Memo.install(centroidsKey(dir), model)
+    graft.Memo(graft.ModelStore.ivf.stamp(dir))(trainCentroids(spark, dir))
 
   private def trainCentroids(spark: SparkSession, dir: String,
       means: DataFrame => DataFrame = cellMeans): Seq[(Long, Seq[Double])] = {
@@ -456,12 +439,12 @@ object Similarity {
     */
   def streamingCellScores(stream: DataFrame,
                           centroids: Seq[(Long, Seq[Double])]): DataFrame = {
-    val nrm = sqrt(dot(col("embedding"), col("embedding")))
+    val nrm = sqrt(DotProductD(col("embedding"), col("embedding")))
     val scored = centroids.map { case (cid, c) =>
       val cArr = array(c.map(lit): _*)
       val cNrm = math.sqrt(c.foldLeft(0.0)((a, x) => a + x * x))
       struct(
-        round(dot(col("embedding"), cArr) / (nrm * lit(cNrm)), 4).as("s"),
+        round(DotProductD(col("embedding"), cArr) / (nrm * lit(cNrm)), 4).as("s"),
         lit(-cid).as("neg_cid"), lit(cid).as("cid"))
     }
     stream.withColumn("best", array_max(array(scored: _*)))
@@ -505,7 +488,7 @@ object Similarity {
     val scored = assigned.join(broadcast(probes),
         col("cell") === col("q_cell") && col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id"),
-        round(dot(col("q_emb"), col("embedding")) /
+        round(DotProductD(col("q_emb"), col("embedding")) /
           (col("q_nrm") * col("nrm")), 4).as("cos"))
     topPerQuery(scored, 3)
   }
@@ -546,7 +529,7 @@ object Similarity {
       col("nrm").as("a_nrm"))
     val dups = assigned.join(earlier,
         col("a_cell") === col("cell") && col("a_id") < col("vec_id"))
-      .filter(round(dot(col("a_emb"), col("embedding")) /
+      .filter(round(DotProductD(col("a_emb"), col("embedding")) /
         (col("a_nrm") * col("nrm")), 4) >= tau)
       .groupBy(col("vec_id"))
       .agg(min(col("a_id")).as("dup_of"))
@@ -658,7 +641,7 @@ object Similarity {
         col("a.bucket") === col("b.bucket") &&
           col("a.vec_id") =!= col("b.vec_id"))
       .select(col("a.vec_id").as("q_id"), col("b.vec_id").as("vec_id"),
-        round(dot(col("a.embedding"), col("b.embedding")) /
+        round(DotProductD(col("a.embedding"), col("b.embedding")) /
           (col("a.nrm") * col("b.nrm")), 4).as("cos"))
     topPerQuery(scored, mutualK)
   }

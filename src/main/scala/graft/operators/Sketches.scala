@@ -100,7 +100,7 @@ object Sketches {
       .localCheckpoint()
 
   /** CMS cells over one document slice — what a nightly job persists
-    * via [[graft.ModelStore.saveCmsCells]]. Built from the slice's
+    * via [[graft.ModelStore.cmsCells]]. Built from the slice's
     * (token, n) reduction (guide §2.3 "aggregate before you shuffle"):
     * by sketch linearity, Σ n per cell over the reduction is
     * bit-identical to incrementing per token occurrence
@@ -163,7 +163,8 @@ object Sketches {
     */
   def cmsTokenCountsServed(spark: SparkSession, dir: String,
                            storePath: String): DataFrame = {
-    val base = graft.ModelStore.loadCmsCells(spark, storePath, dir, "base")
+    val base = graft.ModelStore.load(spark, storePath,
+      graft.ModelStore.cmsCells("base"), dir)
     val merged = base.unionByName(cmsCellsOf(spark, dir, cmsDeltaSide))
       .groupBy("row_j", "bucket").agg(sum(col("cnt")).as("cnt"))
     cmsReadOff(cmsHashed(cmsVocab(spark, dir)), merged)
@@ -447,7 +448,7 @@ object Sketches {
   private[graft] def hdrDeltaSide: Column = col("o_orderkey") % 10 === 0
 
   /** HDR cells over one slice of orders — what a nightly job persists
-    * via [[graft.ModelStore.saveHdrCells]].
+    * via [[graft.ModelStore.hdrCells]].
     */
   private[graft] def hdrCellsOf(spark: SparkSession, dir: String,
                                 pred: Column): DataFrame = {
@@ -464,7 +465,8 @@ object Sketches {
     */
   def hdrQuantilesServed(spark: SparkSession, dir: String,
                          storePath: String): DataFrame = {
-    val base = graft.ModelStore.loadHdrCells(spark, storePath, dir, "base")
+    val base = graft.ModelStore.load(spark, storePath,
+      graft.ModelStore.hdrCells("base"), dir)
     val merged = base.unionByName(hdrCellsOf(spark, dir, hdrDeltaSide))
       .groupBy("e", "sub", "key").agg(sum(col("n")).as("n"))
     hdrReadOff(spark, merged)
@@ -579,7 +581,7 @@ object Sketches {
         col("user_id"))
 
   /** (day, reg, max_rho) register table over one event slice — what a
-    * nightly job persists via [[graft.ModelStore.saveHllDailyRegs]].
+    * nightly job persists via [[graft.ModelStore.hllDailyRegs]].
     */
   private[graft] def hllDailyRegsOf(spark: SparkSession, dir: String,
                                     pred: Column): DataFrame = {
@@ -656,7 +658,8 @@ object Sketches {
     */
   def hllDailyServed(spark: SparkSession, dir: String,
                      storePath: String): DataFrame = {
-    val base = graft.ModelStore.loadHllDailyRegs(spark, storePath, dir, "base")
+    val base = graft.ModelStore.load(spark, storePath,
+      graft.ModelStore.hllDailyRegs("base"), dir)
     val merged = base.unionByName(hllDailyRegsOf(spark, dir, hllDeltaSide))
       .groupBy("day", "reg").agg(max(col("max_rho")).as("max_rho"))
     hllDailyReadOff(spark, dir, merged)

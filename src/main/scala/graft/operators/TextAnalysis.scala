@@ -685,14 +685,11 @@ object TextAnalysis {
       maxDup: Long): DataFrame = {
     val lines = lineTable(spark, dir, width)
     // only lines whose text occurs more than once matter to the keep
-    // verdict; checkpoint so the guard's count() serves from the
-    // materialized census instead of re-running the aggregate
-    val dups = lineCensus(lines).filter(col("c") > 1).localCheckpoint()
-    val nDups = dups.count()
-    val joined =
-      if (nDups <= maxDup) lines.join(broadcast(dups), Seq("line"), "left")
-      else lines.join(dups.hint("shuffle_hash"), Seq("line"), "left")
-    val flagged = joined
+    // verdict; the guard's count rides on the census checkpoint's job
+    val (dups, nDups) =
+      Ranks.checkpointCounted(lineCensus(lines).filter(col("c") > 1))
+    val flagged = lines
+      .join(Ranks.guarded(dups, nDups, maxDup), Seq("line"), "left")
       .select(col("doc_id"), col("line_no"), col("line"),
         (col("c").isNull ||
           col("doc_id") * lit(100000L) + col("line_no") === col("fk"))
@@ -738,39 +735,30 @@ object TextAnalysis {
     val deltaLines = all.filter(col("doc_id") % 10 === 0)
     val base = baseCensus.getOrElse(
       lineCensus(all.filter(col("doc_id") % 10 =!= 0)))
-    // the delta census is delta-sized; checkpoint so the guard count
-    // and the merge both serve from one materialization
-    val dCensus = lineCensus(deltaLines).localCheckpoint()
-    val nDeltaLines = dCensus.count()
+    // the delta census is delta-sized; checkpoint it once for the
+    // merge, its row count riding on the checkpoint's job
+    val (dCensus, nDeltaLines) =
+      Ranks.checkpointCounted(lineCensus(deltaLines))
+    // every build side below is bounded by the MEASURED delta
+    // distinct-line count: guarded broadcast, shuffled-hash past the
+    // budget (never sort-merge; never an unhinted join whose build
+    // side Catalyst's stats would pick, the round-17 lesson)
+    def guarded(df: DataFrame) = Ranks.guarded(df, nDeltaLines, maxDup)
     // restrict the base census to lines the delta actually touches:
     // the census streams through a semi-join whose build side is the
-    // delta's distinct lines — guarded broadcast, shuffled-hash past
-    // the budget (never sort-merge; the census side is the big one)
-    val deltaKeys = dCensus.select("line")
+    // delta's distinct lines
     val relevantBase =
-      if (nDeltaLines <= maxDup)
-        base.join(broadcast(deltaKeys), Seq("line"), "left_semi")
-      else base.join(deltaKeys.hint("shuffle_hash"), Seq("line"), "left_semi")
+      base.join(guarded(dCensus.select("line")), Seq("line"), "left_semi")
     // mergeable-state reconstruction, then the batch pass's
     // duplicated-firsts discipline: only merged lines with global
-    // c > 1 can suppress anything. The build side here is the
-    // semi-filtered base census — bounded by the MEASURED delta
-    // distinct-line count, so the same guard applies (an unhinted
-    // join would let Catalyst's stats decide, the round-17 lesson)
-    val relevantGuarded =
-      if (nDeltaLines <= maxDup) broadcast(relevantBase)
-      else relevantBase.hint("shuffle_hash")
+    // c > 1 can suppress anything
     val merged = dCensus.as("d")
-      .join(relevantGuarded.as("b"), Seq("line"), "left")
+      .join(guarded(relevantBase).as("b"), Seq("line"), "left")
       .select(col("line"),
         (col("d.c") + coalesce(col("b.c"), lit(0L))).as("c"),
         least(col("d.fk"), col("b.fk")).as("fk"))
       .filter(col("c") > 1)
-    val joined =
-      if (nDeltaLines <= maxDup)
-        deltaLines.join(broadcast(merged), Seq("line"), "left")
-      else deltaLines.join(merged.hint("shuffle_hash"), Seq("line"), "left")
-    val flagged = joined
+    val flagged = deltaLines.join(guarded(merged), Seq("line"), "left")
       .select(col("doc_id"), col("line_no"), col("line"),
         (col("c").isNull ||
           col("doc_id") * lit(100000L) + col("line_no") === col("fk"))

@@ -106,9 +106,6 @@ object ChangeLog {
   def fileStream(spark: SparkSession, dir: String): DataFrame =
     spark.readStream.schema(ChangeEvent.envelopeSchema).parquet(dir)
 
-  def fileBatch(spark: SparkSession, dir: String): DataFrame =
-    spark.read.schema(ChangeEvent.envelopeSchema).parquet(dir)
-
   /** RegexRouter SMT (`debezium_configuration.json:50-52`,
     * `README.md:258-260`): topic `sql_topic.public.<t>` → sink table
     * `<t>_changes`.

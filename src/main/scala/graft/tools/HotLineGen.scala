@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Deterministic hot-line corpus generator for the line-dedup skew
@@ -23,12 +22,7 @@ object HotLineGen {
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse("/root/repo/hotline1")
     val nDocs = if (args.length > 1) args(1).toLong else 50000L
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession("WARN")
     val body = "array_join(transform(sequence(1, 40), " +
       "i -> concat('t', substr(md5(concat(doc_id, '_', i)), 1, 6))), ' ')"
     spark.range(1, nDocs + 1).toDF("doc_id")

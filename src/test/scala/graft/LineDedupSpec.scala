@@ -143,11 +143,11 @@ class LineDedupSpec extends SparkSpec {
           "i -> array_join(slice(ws, i * 5 + 1, 5), ' '))"))
         .as(Seq("p", "line")))
       .select(col("doc_id"), col("p").cast("long").as("line_no"), col("line"))
-    ModelStore.saveLineCensus(spark, store, dir, "base",
+    ModelStore.save(spark, store, ModelStore.lineCensus("base"), dir,
       TextAnalysis.lineCensus(baseLines))
     val served = TextAnalysis.lineDedupIncremental(spark, dir,
       TextAnalysis.lineWords, TextAnalysis.maxBroadcastDupLines,
-      Some(ModelStore.loadLineCensus(spark, store, dir, "base")))
+      Some(ModelStore.load(spark, store, ModelStore.lineCensus("base"), dir)))
     assert(served.collect().map(_.toSeq).toSeq === full.toSeq,
       "the ModelStore-served census must reproduce the recompute")
 

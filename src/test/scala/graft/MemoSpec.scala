@@ -87,7 +87,7 @@ class MemoSpec extends SparkSpec {
     // the operators' install slots share their lookup's key: an
     // installed model is served without training
     val w = Array(3L, -1L, 2L, 0L, 5L, -4L)
-    ModelStore.installPerceptron(dir, w)
+    ModelStore.install(ModelStore.perceptron, dir, w)
     assert(operators.Perceptron.trainedWeights(spark, dir) eq w)
   }
 }

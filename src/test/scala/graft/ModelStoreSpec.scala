@@ -31,14 +31,75 @@ class ModelStoreSpec extends SparkSpec {
   private def collected(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).toSeq
 
+  test("every family keeps its stored identity: family string, stamp, " +
+    "params and payload columns") {
+    // the identity every stored artifact carries, written out as
+    // literals: a change to any of these orphans the artifacts already
+    // on disk, so it must be deliberate
+    import graft.operators.{Opq, Sketches, TextAnalysis}
+    def pin[V](f: ModelStore.Family[V], v: V, family: String, table: String,
+               tag: String, params: String, payload: (String, String)*): Unit = {
+      assert(f.name === family)
+      assert(f.stamp(dir) === DataVersion.key(dir, table, tag), family)
+      assert(f.paramsOf(v) === params, family)
+      assert(f.encode(spark, v).dtypes.toSeq === payload, family)
+    }
+    def frame(cols: String*): DataFrame = // plus a column the save drops
+      spark.range(1).select((cols :+ "extra").map(c => lit(0L).as(c)): _*)
+    def longs(cols: String*) = cols.map(_ -> "LongType")
+    val arr = "ArrayType(DoubleType,false)"
+    pin(ModelStore.ivf, Seq((7L, Seq(1.0, 2.0))), "ivf", "embeddings", "ivf",
+      "", "ord" -> "IntegerType", "c_id" -> "LongType", "c_emb" -> arr)
+    pin(ModelStore.pq(32), Seq((1, 7L, Seq(1.0))), "pq", "embeddings",
+      "pq32", "k=32", "ord" -> "IntegerType", "m" -> "IntegerType",
+      "c_id" -> "LongType", "c_emb" -> arr)
+    pin(ModelStore.bpeMerges(100, 5000L), Seq((0L, "a", "b", "ab", 3L)),
+      "bpe_merges", "documents", "bpe", "merges=100#gate=5000",
+      "rank" -> "LongType", "left" -> "StringType", "right" -> "StringType",
+      "merged" -> "StringType", "n" -> "LongType")
+    pin(ModelStore.bpeSegmentation(100, 5000L), frame("w", "sub"), "bpe_seg",
+      "documents", "bpe", "merges=100#gate=5000", longs("w", "sub"): _*)
+    pin(ModelStore.perceptron, Array(1L, -2L), "perceptron", "documents",
+      "perceptron", "", "ord" -> "IntegerType", "w" -> "LongType")
+    pin(ModelStore.dsir, Array(1L, -2L, 3L), "dsir", "documents", "dsir",
+      "buckets=3", "ord" -> "IntegerType", "w" -> "LongType")
+    val d = Opq.rotationDims
+    pin(ModelStore.opq, Opq.Rotation(Array(0, 3), Array(0.5, 0.25),
+        Array.fill(d)(Array(1L, 0L)), Array.fill(d)(2L),
+        Array.tabulate(d)(identity), true), "opq", "embeddings", "opqrot", "",
+      "ord" -> "LongType", "k" -> "IntegerType", "out_dim" -> "IntegerType",
+      "in_dim" -> "IntegerType", "mu" -> "DoubleType", "w" -> "LongType",
+      "lam" -> "LongType", "exact" -> "BooleanType")
+    pin(ModelStore.anomalyBaseline,
+      frame("event_type", "b_cnt", "b_sum", "b_ss"), "anomaly_baseline",
+      "events", "anomaly", "", longs("event_type", "b_cnt", "b_sum", "b_ss"): _*)
+    pin(ModelStore.hdrCells("base"), frame("e", "sub", "key", "n"),
+      "hdr_cells", "orders", "hdr#base", s"subBits=${Sketches.hdrSubBits}",
+      longs("e", "sub", "key", "n"): _*)
+    pin(ModelStore.hllDailyRegs("base"), frame("day", "reg", "max_rho"),
+      "hll_daily_regs", "events", "hll#base", s"m=${Sketches.hllRegisters}",
+      longs("day", "reg", "max_rho"): _*)
+    pin(ModelStore.thetaSketch("a"), frame("h"), "theta_kmv", "orders",
+      "theta#a", s"k=${Sketches.thetaK}", longs("h"): _*)
+    pin(ModelStore.lineCensus("base"), frame("line", "c", "fk"),
+      "line_census", "documents", "lines#base",
+      s"width=${TextAnalysis.lineWords}", longs("line", "c", "fk"): _*)
+    pin(ModelStore.cmsCells("base"), frame("row_j", "bucket", "cnt"),
+      "cms_cells", "documents", "cms#base",
+      s"d=${Sketches.cmsDepth}#w=${Sketches.cmsWidth}",
+      longs("row_j", "bucket", "cnt"): _*)
+    pin(ModelStore.bloom, (130L, Array(5L, 0L, 1L)), "bloom", "documents",
+      "bloom", "m=130", "ord" -> "IntegerType", "word" -> "LongType")
+  }
+
   test("IVF centroids: save -> stamped reload -> bit-equal ann_ivf serving") {
     val trained = Similarity.trainedCentroids(spark, dir)
     val baseline = collected(SparkEntry.queries("ann_ivf")(spark, dir))
     val path = tmp("ivf")
-    ModelStore.saveIvf(spark, path, dir, trained)
-    val loaded = ModelStore.loadIvf(spark, path, dir)
+    ModelStore.save(spark, path, ModelStore.ivf, dir, trained)
+    val loaded = ModelStore.load(spark, path, ModelStore.ivf, dir)
     assert(loaded === trained, "parquet round-trip must be exact")
-    ModelStore.installIvf(dir, loaded)
+    ModelStore.install(ModelStore.ivf, dir, loaded)
     // the serving slot now holds the RELOADED object, not the trained one
     assert(Similarity.trainedCentroids(spark, dir) eq
       loaded.asInstanceOf[AnyRef])
@@ -51,16 +112,16 @@ class ModelStoreSpec extends SparkSpec {
     val baseline =
       collected(SparkEntry.queries("ann_pq_recall_k256")(spark, dir))
     val path = tmp("pq")
-    ModelStore.savePq(spark, path, dir, k, trained)
-    val loaded = ModelStore.loadPq(spark, path, dir, k)
+    ModelStore.save(spark, path, ModelStore.pq(k), dir, trained)
+    val loaded = ModelStore.load(spark, path, ModelStore.pq(k), dir)
     assert(loaded === trained, "parquet round-trip must be exact")
-    ModelStore.installPq(dir, k, loaded)
+    ModelStore.install(ModelStore.pq(k), dir, loaded)
     assert(Pq.trainedCodebook(spark, dir, k) eq loaded.asInstanceOf[AnyRef])
     assert(collected(SparkEntry.queries("ann_pq_recall_k256")(spark, dir))
       === baseline)
     // wrong hyperparameter: a K=256 artifact must not serve a K=32 ask
     intercept[IllegalArgumentException] {
-      ModelStore.loadPq(spark, path, dir, Pq.codebookSize)
+      ModelStore.load(spark, path, ModelStore.pq(Pq.codebookSize), dir)
     }
   }
 
@@ -68,8 +129,8 @@ class ModelStoreSpec extends SparkSpec {
     val trained = graft.operators.Opq.trainedRotation(spark, dir)
     val baseline = collected(SparkEntry.queries("opq_rotation")(spark, dir))
     val path = tmp("opq")
-    ModelStore.saveOpq(spark, path, dir, trained)
-    val loaded = ModelStore.loadOpq(spark, path, dir)
+    ModelStore.save(spark, path, ModelStore.opq, dir, trained)
+    val loaded = ModelStore.load(spark, path, ModelStore.opq, dir)
     // micros are Longs — the round-trip is exact by construction
     assert(loaded.dims === trained.dims)
     assert(loaded.mu === trained.mu)
@@ -78,7 +139,7 @@ class ModelStoreSpec extends SparkSpec {
     assert(loaded.exact === trained.exact)
     assert((0 until graft.operators.Opq.rotationDims)
       .forall(k => loaded.basis(k).sameElements(trained.basis(k))))
-    ModelStore.installOpq(dir, loaded)
+    ModelStore.install(ModelStore.opq, dir, loaded)
     assert(graft.operators.Opq.trainedRotation(spark, dir) eq
       loaded.asInstanceOf[AnyRef])
     assert(collected(SparkEntry.queries("opq_rotation")(spark, dir))
@@ -94,16 +155,19 @@ class ModelStoreSpec extends SparkSpec {
     val baseline = collected(SparkEntry.queries("text_bpe_encode")(spark, dir))
     val seg = BpeTrainer.segmentation(spark, dir)
     val path = tmp("bpe")
-    ModelStore.saveBpeMerges(spark, path + "/m", dir, merges, gate, trainRows)
+    ModelStore.save(spark, path + "/m",
+      ModelStore.bpeMerges(merges, gate), dir, trainRows)
     val loadedMerges =
-      ModelStore.loadBpeMerges(spark, path + "/m", dir, merges, gate)
+      ModelStore.load(spark, path + "/m", ModelStore.bpeMerges(merges, gate), dir)
     assert(loadedMerges === trainRows, "merge table round-trip must be exact")
-    ModelStore.saveBpeSegmentation(spark, path + "/s", dir, merges, gate, seg)
+    ModelStore.save(spark, path + "/s",
+      ModelStore.bpeSegmentation(merges, gate), dir, seg)
     val loadedSeg =
-      ModelStore.loadBpeSegmentation(spark, path + "/s", dir, merges, gate)
+      ModelStore.load(spark, path + "/s",
+        ModelStore.bpeSegmentation(merges, gate), dir)
     assert(collected(loadedSeg.orderBy("w")) === collected(seg.orderBy("w")),
       "segmentation round-trip must be exact")
-    ModelStore.installBpe(spark, dir, merges, gate, loadedMerges, loadedSeg)
+    BpeTrainer.installModel(spark, dir, merges, gate, loadedMerges, loadedSeg)
     assert(collected(SparkEntry.queries("text_bpe_encode")(spark, dir))
       === baseline)
     // the merge view also serves from the installed rows
@@ -116,10 +180,10 @@ class ModelStoreSpec extends SparkSpec {
     val baseline =
       collected(SparkEntry.queries("text_quality_classifier")(spark, dir))
     val path = tmp("perceptron")
-    ModelStore.savePerceptron(spark, path, dir, trained)
-    val loaded = ModelStore.loadPerceptron(spark, path, dir)
+    ModelStore.save(spark, path, ModelStore.perceptron, dir, trained)
+    val loaded = ModelStore.load(spark, path, ModelStore.perceptron, dir)
     assert(loaded.toSeq === trained.toSeq, "weight round-trip must be exact")
-    ModelStore.installPerceptron(dir, loaded)
+    ModelStore.install(ModelStore.perceptron, dir, loaded)
     assert(Perceptron.trainedWeights(spark, dir) eq
       loaded.asInstanceOf[AnyRef])
     assert(collected(SparkEntry.queries("text_quality_classifier")(spark, dir))
@@ -132,8 +196,8 @@ class ModelStoreSpec extends SparkSpec {
     val baseline = collected(
       StreamingDedup.maybeDupStream(docs, m, words).orderBy("doc_id"))
     val path = tmp("bloom")
-    ModelStore.saveBloom(spark, path, dir, m, words)
-    val (m2, words2) = ModelStore.loadBloom(spark, path, dir)
+    ModelStore.save(spark, path, ModelStore.bloom, dir, (m, words))
+    val (m2, words2) = ModelStore.load(spark, path, ModelStore.bloom, dir)
     assert(m2 === m)
     assert(words2.toSeq === words.toSeq, "bitmap round-trip must be exact")
     assert(collected(
@@ -153,8 +217,8 @@ class ModelStoreSpec extends SparkSpec {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     val (m, words) = operators.Dedup.bloomArtifact(spark, dir)
     val path = tmp("bloom-live")
-    ModelStore.saveBloom(spark, path, dir, m, words)
-    val (mL, wordsL) = ModelStore.loadBloom(spark, path, dir)
+    ModelStore.save(spark, path, ModelStore.bloom, dir, (m, words))
+    val (mL, wordsL) = ModelStore.load(spark, path, ModelStore.bloom, dir)
     val probeDocs = Tables(spark, dir, "documents")
       .filter(col("doc_id") % 10 === 0)
       .select("doc_id", "text").as[(Long, String)].collect().toSeq
@@ -180,8 +244,8 @@ class ModelStoreSpec extends SparkSpec {
     val baseline = collected(
       operators.Dsir.streamingScores(docs, trained).orderBy("doc_id"))
     val path = tmp("dsir")
-    ModelStore.saveDsir(spark, path, dir, trained)
-    val loaded = ModelStore.loadDsir(spark, path, dir)
+    ModelStore.save(spark, path, ModelStore.dsir, dir, trained)
+    val loaded = ModelStore.load(spark, path, ModelStore.dsir, dir)
     assert(loaded.toSeq === trained.toSeq, "weight round-trip must be exact")
     assert(collected(
       operators.Dsir.streamingScores(docs, loaded).orderBy("doc_id"))
@@ -197,8 +261,8 @@ class ModelStoreSpec extends SparkSpec {
         .orderBy("event_type", "hour_idx"))
     val baseline = scores(trained)
     val path = tmp("anomaly")
-    ModelStore.saveAnomalyBaseline(spark, path, dir, trained)
-    val loaded = ModelStore.loadAnomalyBaseline(spark, path, dir)
+    ModelStore.save(spark, path, ModelStore.anomalyBaseline, dir, trained)
+    val loaded = ModelStore.load(spark, path, ModelStore.anomalyBaseline, dir)
     assert(collected(loaded.orderBy("event_type")) ===
       collected(trained.orderBy("event_type")),
       "baseline round-trip must be exact")
@@ -209,7 +273,7 @@ class ModelStoreSpec extends SparkSpec {
     import graft.operators.Sketches
     val path = tmp("hdr")
     // the nightly save: base-slice cells only
-    ModelStore.saveHdrCells(spark, path, dir, "base",
+    ModelStore.save(spark, path, ModelStore.hdrCells("base"), dir,
       Sketches.hdrCellsOf(spark, dir, Sketches.hdrBaseSide))
     // the increment: reload base (stamp-validated), sketch the delta,
     // merge, read off — must equal the whole-corpus row bit for bit
@@ -217,35 +281,35 @@ class ModelStoreSpec extends SparkSpec {
       collected(Sketches.hdrQuantiles(spark, dir)))
     // wrong slice name refuses (it is part of the stamp)
     intercept[IllegalArgumentException] {
-      ModelStore.loadHdrCells(spark, path, dir, "delta")
+      ModelStore.load(spark, path, ModelStore.hdrCells("delta"), dir)
     }
   }
 
   test("HLL daily regs: persisted base + fresh delta serves == full recompute") {
     import graft.operators.Sketches
     val path = tmp("hll")
-    ModelStore.saveHllDailyRegs(spark, path, dir, "base",
+    ModelStore.save(spark, path, ModelStore.hllDailyRegs("base"), dir,
       Sketches.hllDailyRegsOf(spark, dir, Sketches.hllBaseSide))
     // reload base (stamp-validated), sketch the delta, MAX-merge (the
     // HLL union), read off — must equal the whole-corpus row bit for bit
     assert(collected(Sketches.hllDailyServed(spark, dir, path)) ===
       collected(Sketches.hllDailyUsers(spark, dir)))
     intercept[IllegalArgumentException] {
-      ModelStore.loadHllDailyRegs(spark, path, dir, "delta")
+      ModelStore.load(spark, path, ModelStore.hllDailyRegs("delta"), dir)
     }
   }
 
   test("CMS cells: persisted base + fresh delta serves == full recompute") {
     import graft.operators.Sketches
     val path = tmp("cms")
-    ModelStore.saveCmsCells(spark, path, dir, "base",
+    ModelStore.save(spark, path, ModelStore.cmsCells("base"), dir,
       Sketches.cmsCellsOf(spark, dir, Sketches.cmsBaseSide))
     // reload base (stamp-validated), sketch the delta tokens, keyed
     // sum (cell linearity), read off — bit-equal to the full recompute
     assert(collected(Sketches.cmsTokenCountsServed(spark, dir, path)) ===
       collected(Sketches.cmsTokenCounts(spark, dir)))
     intercept[IllegalArgumentException] {
-      ModelStore.loadCmsCells(spark, path, dir, "delta")
+      ModelStore.load(spark, path, ModelStore.cmsCells("delta"), dir)
     }
   }
 
@@ -258,11 +322,11 @@ class ModelStoreSpec extends SparkSpec {
     // the meta (the commit's first move) — load must refuse on the
     // missing marker regardless of what the payload dir holds.
     val path = tmp("overwrite")
-    ModelStore.savePerceptron(spark, path, dir, Array(1L, 2L, 3L, 4L, 5L, 6L))
+    ModelStore.save(spark, path, ModelStore.perceptron, dir, Array(1L, 2L, 3L, 4L, 5L, 6L))
     // second save onto the same path succeeds end-to-end (marker is
     // re-created after the new payload swaps in)
-    ModelStore.savePerceptron(spark, path, dir, Array(9L, 8L, 7L, 6L, 5L, 4L))
-    assert(ModelStore.loadPerceptron(spark, path, dir).toSeq ===
+    ModelStore.save(spark, path, ModelStore.perceptron, dir, Array(9L, 8L, 7L, 6L, 5L, 4L))
+    assert(ModelStore.load(spark, path, ModelStore.perceptron, dir).toSeq ===
       Seq(9L, 8L, 7L, 6L, 5L, 4L))
     // now the torn overwrite: marker deleted (commit's first move),
     // then the process dies mid-swap — whatever the payload dir holds,
@@ -273,7 +337,7 @@ class ModelStoreSpec extends SparkSpec {
     }
     rmdir(new java.io.File(path, "meta.parquet"))
     intercept[Exception] {
-      ModelStore.loadPerceptron(spark, path, dir)
+      ModelStore.load(spark, path, ModelStore.perceptron, dir)
     }
   }
 
@@ -286,7 +350,7 @@ class ModelStoreSpec extends SparkSpec {
     // previously committed artifact fully intact
     import spark.implicits._
     val path = tmp("durable")
-    ModelStore.savePerceptron(spark, path, dir, Array(1L, 2L, 3L, 4L, 5L, 6L))
+    ModelStore.save(spark, path, ModelStore.perceptron, dir, Array(1L, 2L, 3L, 4L, 5L, 6L))
     val boom = udf((_: Long) => {
       throw new RuntimeException("simulated mid-write failure"); 0L
     })
@@ -298,7 +362,7 @@ class ModelStoreSpec extends SparkSpec {
           DataVersion.key(dir, "documents", "perceptron"), ""), poisoned)
     }
     // the failed save destroyed nothing: the v1 artifact still serves
-    assert(ModelStore.loadPerceptron(spark, path, dir).toSeq ===
+    assert(ModelStore.load(spark, path, ModelStore.perceptron, dir).toSeq ===
       Seq(1L, 2L, 3L, 4L, 5L, 6L))
   }
 
@@ -310,7 +374,7 @@ class ModelStoreSpec extends SparkSpec {
     // require(), not a raw parquet path-not-found — and a staging dir
     // left by a writer that died mid-stage is swept by the next save
     val path = tmp("midcommit")
-    ModelStore.savePerceptron(spark, path, dir, Array(1L, 2L, 3L, 4L, 5L, 6L))
+    ModelStore.save(spark, path, ModelStore.perceptron, dir, Array(1L, 2L, 3L, 4L, 5L, 6L))
     // reproduce the mid-commit state: marker gone, staging populated
     def rmdir(f: java.io.File): Unit = {
       Option(f.listFiles()).foreach(_.foreach(rmdir))
@@ -321,13 +385,13 @@ class ModelStoreSpec extends SparkSpec {
     new java.io.File(staging, "payload.parquet").mkdirs()
     rmdir(new java.io.File(path, "meta.parquet"))
     val e = intercept[IllegalArgumentException] {
-      ModelStore.loadPerceptron(spark, path, dir)
+      ModelStore.load(spark, path, ModelStore.perceptron, dir)
     }
     assert(e.getMessage.contains("no committed artifact"),
       s"mid-commit reader must get the clean refusal, got: ${e.getMessage}")
     // recovery: a fresh save sweeps the debris and commits normally
-    ModelStore.savePerceptron(spark, path, dir, Array(7L, 7L, 7L, 7L, 7L, 7L))
-    assert(ModelStore.loadPerceptron(spark, path, dir).toSeq ===
+    ModelStore.save(spark, path, ModelStore.perceptron, dir, Array(7L, 7L, 7L, 7L, 7L, 7L))
+    assert(ModelStore.load(spark, path, ModelStore.perceptron, dir).toSeq ===
       Seq(7L, 7L, 7L, 7L, 7L, 7L))
     assert(!staging.exists(), "commit must clean up the staging dir")
   }
@@ -336,14 +400,14 @@ class ModelStoreSpec extends SparkSpec {
     "refuses") {
     import spark.implicits._
     val path = tmp("torn")
-    ModelStore.savePerceptron(spark, path, dir, Array(1L, 2L, 3L, 4L, 5L, 6L))
+    ModelStore.save(spark, path, ModelStore.perceptron, dir, Array(1L, 2L, 3L, 4L, 5L, 6L))
     // corrupt: rewrite the payload with fewer rows while keeping the
     // committed meta (simulates a storage-level truncation the commit
     // protocol itself cannot see)
     Seq((0, 1L), (1, 2L)).toDF("ord", "w")
       .write.mode("overwrite").parquet(s"$path/payload.parquet")
     val e = intercept[IllegalArgumentException] {
-      ModelStore.loadPerceptron(spark, path, dir)
+      ModelStore.load(spark, path, ModelStore.perceptron, dir)
     }
     assert(e.getMessage.contains("TORN artifact"))
   }
@@ -354,14 +418,14 @@ class ModelStoreSpec extends SparkSpec {
     // must fail loudly (no meta = no artifact), never serve the
     // orphaned payload
     val path = tmp("crash")
-    ModelStore.savePerceptron(spark, path, dir, Array(1L, 2L, 3L, 4L, 5L, 6L))
+    ModelStore.save(spark, path, ModelStore.perceptron, dir, Array(1L, 2L, 3L, 4L, 5L, 6L))
     def rmdir(f: java.io.File): Unit = {
       Option(f.listFiles()).foreach(_.foreach(rmdir))
       f.delete()
     }
     rmdir(new java.io.File(path, "meta.parquet"))
     intercept[Exception] {
-      ModelStore.loadPerceptron(spark, path, dir)
+      ModelStore.load(spark, path, ModelStore.perceptron, dir)
     }
   }
 
@@ -373,23 +437,23 @@ class ModelStoreSpec extends SparkSpec {
     val copy = tmp("data")
     Tables(spark, dir, "documents").write.parquet(s"$copy/documents.parquet")
     val w = Array(1L, 2L, 3L, 4L, 5L, 6L)
-    ModelStore.savePerceptron(spark, path, copy, w)
-    assert(ModelStore.loadPerceptron(spark, path, copy).toSeq === w.toSeq)
+    ModelStore.save(spark, path, ModelStore.perceptron, copy, w)
+    assert(ModelStore.load(spark, path, ModelStore.perceptron, copy).toSeq === w.toSeq)
     // regenerate the table under the same path -> new fingerprint
     // (reads from the ORIGINAL dir so the overwritten path is not
     // simultaneously a read source)
     Tables(spark, dir, "documents").limit(5).write.mode("overwrite")
       .parquet(s"$copy/documents.parquet")
     intercept[IllegalArgumentException] {
-      ModelStore.loadPerceptron(spark, path, copy)
+      ModelStore.load(spark, path, ModelStore.perceptron, copy)
     }
     // wrong family: an ivf ask on a perceptron artifact refuses
     intercept[IllegalArgumentException] {
-      ModelStore.load(spark, path, "ivf", "whatever", requireFresh = false)
+      ModelStore.load(spark, path, ModelStore.ivf, copy, requireFresh = false)
     }
     // deliberate pinned-model serve: requireFresh=false loads anyway
     val (meta, payload) = ModelStore.load(spark, path, "perceptron",
-      "ignored", requireFresh = false)
+      "ignored", None, requireFresh = false)
     assert(meta.family === "perceptron")
     assert(payload.orderBy("ord").select("w").as[Long].collect().toSeq
       === w.toSeq)

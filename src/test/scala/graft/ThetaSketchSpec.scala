@@ -78,8 +78,8 @@ class ThetaSketchSpec extends SparkSpec {
     // ModelStore round-trip: the stored sketch is the sketch
     val store = java.nio.file.Files.createTempDirectory("theta").toString
     val dir = "/root/testdata/sf0.001"
-    ModelStore.saveThetaSketch(spark, store, dir, "a", kmvA)
-    val served = ModelStore.loadThetaSketch(spark, store, dir, "a")
+    ModelStore.save(spark, store, ModelStore.thetaSketch("a"), dir, kmvA)
+    val served = ModelStore.load(spark, store, ModelStore.thetaSketch("a"), dir)
     assert(served.collect().map(_.getLong(0)).sorted.toSeq ===
       kmvA.collect().map(_.getLong(0)).sorted.toSeq,
       "reloaded sketch frame must be bit-equal")
