@@ -2,10 +2,6 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.graft.bridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -98,34 +94,15 @@ object BigramEntropyKernel {
   * [[Int8QuantStats]] — one static-kernel call inside whole-stage
   * codegen, with the interpreted path evaluating the identical kernel.
   */
-case class BigramEntropyStats(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"bigram_entropy_stats needs a string child, got $t")
+object BigramEntropyStats extends Kernel("bigram_entropy_stats", 1, Nil) {
+  def bind(t: Seq[DataType], s: Seq[Int]): Either[String, (String, DataType)] = t.head match {
+    case StringType => Right("BigramEntropyKernel.stats" -> StructType(Seq(
+      StructField("n_bigrams", LongType, nullable = false),
+      StructField("n_distinct", LongType, nullable = false),
+      StructField("plogp_sum", DoubleType, nullable = false))))
+    case other => Left(s"bigram_entropy_stats needs a string child, got $other")
   }
 
-  override def dataType: DataType = StructType(Seq(
-    StructField("n_bigrams", LongType, nullable = false),
-    StructField("n_distinct", LongType, nullable = false),
-    StructField("plogp_sum", DoubleType, nullable = false)))
-
-  override def prettyName: String = "bigram_entropy_stats"
-
-  override protected def nullSafeEval(a: Any): Any =
-    BigramEntropyKernel.stats(a.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.functions.BigramEntropyKernel.stats($a);")
-
-  override protected def withNewChildInternal(newChild: Expression): BigramEntropyStats =
-    copy(child = newChild)
-}
-
-object BigramEntropyStats {
   /** Column-API entry point. */
-  def apply(a: Column): Column =
-    bridge.column(BigramEntropyStats(bridge.expression(a)))
+  def apply(a: Column): Column = call(Seq(a))
 }

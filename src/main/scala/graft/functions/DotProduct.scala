@@ -1,11 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.graft.bridge
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
 /** Kernel shared by interpreted eval and generated code: Σ aᵢ·bᵢ in
@@ -62,59 +58,23 @@ object VectorKernel {
   * Spark's higher-order functions (`zip_with`, `aggregate`) evaluate
   * through the interpreted lambda path — per element they allocate and
   * box; on the ANN hot loop (every query×candidate pair) that is the
-  * dominant cost. This expression is a single fused loop over the two
-  * `ArrayData` buffers inside whole-stage codegen.
+  * dominant cost. This kernel is a single fused loop over the two
+  * `ArrayData` buffers inside whole-stage codegen; the variant (FF, FD,
+  * DF or DD) is selected statically from the child element types, so
+  * codegen emits a direct monomorphic call.
   */
-case class DotProductD(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  private def ok(t: DataType) = t match {
-    case ArrayType(FloatType, _) | ArrayType(DoubleType, _) => true
-    case _ => false
-  }
-
-  /** Kernel variant selected statically from the child element types, so
-    * codegen emits a direct monomorphic call (FF, FD, DF, or DD).
-    */
-  private def kernel: String = {
-    def tag(t: DataType) = t match {
+object DotProductD extends Kernel("dot_product_d", 2, Nil) {
+  def bind(t: Seq[DataType], s: Seq[Int]): Either[String, (String, DataType)] = {
+    def tag(d: DataType) = d match {
       case ArrayType(FloatType, _) => "F"
-      case _ => "D"
+      case ArrayType(DoubleType, _) => "D"
+      case _ => ""
     }
-    s"dot${tag(left.dataType)}${tag(right.dataType)}"
+    val variant = tag(t(0)) + tag(t(1))
+    if (variant.length == 2) Right(s"VectorKernel.dot$variant" -> DoubleType)
+    else Left(s"dot_product_d needs two array<float|double> children, got ${t(0)} and ${t(1)}")
   }
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (ok(left.dataType) && ok(right.dataType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"dot_product_d needs two array<float|double> children, got " +
-        s"${left.dataType} and ${right.dataType}")
-
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = left.nullable || right.nullable
-  override def prettyName: String = "dot_product_d"
-
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val (x, y) = (a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-    kernel match {
-      case "dotFF" => VectorKernel.dotFF(x, y)
-      case "dotFD" => VectorKernel.dotFD(x, y)
-      case "dotDF" => VectorKernel.dotDF(x, y)
-      case _       => VectorKernel.dotDD(x, y)
-    }
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.functions.VectorKernel.$kernel($a, $b);")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): DotProductD =
-    copy(left = newLeft, right = newRight)
-}
-
-object DotProductD {
   /** Column-API entry point: `dot($"a", $"b")`. */
-  def apply(a: Column, b: Column): Column =
-    bridge.column(DotProductD(bridge.expression(a), bridge.expression(b)))
+  def apply(a: Column, b: Column): Column = call(Seq(a, b))
 }

@@ -1,19 +1,14 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 import org.apache.spark.sql.graft.bridge
-import org.apache.spark.sql.types.IntegerType
 
-/** SQL surface for graft's native Catalyst expressions: exposes
-  * `ngram_minhash_md5`, `ngram_minhash_affine`, `rolling_hash`,
-  * `dot_product_d`, `winnow`, `window_hashes`, `int8_quant_stats`,
-  * `lz78_phrase_count`, and `bigram_entropy_stats` to
-  * `spark.sql(...)` users, so the
-  * engine's custom kernels are first-class functions, not
-  * Column-API-only.
+/** SQL surface for graft's native Catalyst expressions: every [[Kernel]]
+  * in [[GraftFunctions.all]] is exposed to `spark.sql(...)` users under
+  * its declared name, so the engine's custom kernels are first-class
+  * functions, not Column-API-only.
   *
   * Two registration paths:
   *  - [[GraftExtensions]] via `spark.sql.extensions=graft.functions.GraftExtensions`
@@ -22,75 +17,14 @@ import org.apache.spark.sql.types.IntegerType
   */
 object GraftFunctions {
 
-  /** Static parameters (shingle width, hash count, window) must be
-    * integer literals — they parameterize codegen, not per-row data.
-    */
-  private def intArg(e: Expression, fn: String, what: String): Int = e match {
-    case Literal(v: Int, IntegerType) => v
-    case other => throw new IllegalArgumentException(
-      s"$fn: $what must be an integer literal, got $other")
-  }
-
-  private def arity(fn: String, args: Seq[Expression], n: Int): Unit =
-    if (args.length != n) throw new IllegalArgumentException(
-      s"$fn expects $n arguments, got ${args.length}")
-
-  /** name → builder for every native expression. */
-  val all: Seq[(String, Seq[Expression] => Expression)] = Seq(
-    "ngram_minhash_md5" -> { args =>
-      arity("ngram_minhash_md5", args, 3)
-      NgramMinHashMd5(args(0),
-        intArg(args(1), "ngram_minhash_md5", "shingle width n"),
-        intArg(args(2), "ngram_minhash_md5", "numHashes k"))
-    },
-    "ngram_minhash_affine" -> { args =>
-      arity("ngram_minhash_affine", args, 3)
-      NgramMinHashAffine(args(0),
-        intArg(args(1), "ngram_minhash_affine", "shingle width n"),
-        intArg(args(2), "ngram_minhash_affine", "numHashes k"))
-    },
-    "rolling_hash" -> { args =>
-      arity("rolling_hash", args, 2)
-      RollingHash(args(0), intArg(args(1), "rolling_hash", "window"))
-    },
-    "dot_product_d" -> { args =>
-      arity("dot_product_d", args, 2)
-      DotProductD(args(0), args(1))
-    },
-    "winnow" -> { args =>
-      arity("winnow", args, 3)
-      WinnowFingerprints(args(0),
-        intArg(args(1), "winnow", "k-gram width k"),
-        intArg(args(2), "winnow", "selection window w"))
-    },
-    "window_hashes" -> { args =>
-      arity("window_hashes", args, 2)
-      WindowHashes(args(0), intArg(args(1), "window_hashes", "k-gram width k"))
-    },
-    "int8_quant_stats" -> { args =>
-      arity("int8_quant_stats", args, 1)
-      Int8QuantStats(args(0))
-    },
-    "lz78_phrase_count" -> { args =>
-      arity("lz78_phrase_count", args, 1)
-      Lz78PhraseCount(args(0))
-    },
-    "bigram_entropy_stats" -> { args =>
-      arity("bigram_entropy_stats", args, 1)
-      BigramEntropyStats(args(0))
-    },
-    "greedy_chunk_ends" -> { args =>
-      arity("greedy_chunk_ends", args, 2)
-      GreedyChunkEnds(args(0),
-        intArg(args(1), "greedy_chunk_ends", "max chunk chars"))
-    },
-  )
+  /** Every native kernel declaration. */
+  val all: Seq[Kernel] = Seq(NgramMinHashMd5, NgramMinHashAffine, RollingHash,
+    WindowHashes, DupSpanIslands, CutDupSpans, WinnowFingerprints, DotProductD,
+    Int8QuantStats, Lz78PhraseCount, BigramEntropyStats, GreedyChunkEnds)
 
   /** Register every native function on a live session. */
   def register(spark: SparkSession): Unit =
-    all.foreach { case (name, builder) =>
-      bridge.registerFunction(spark, name, builder)
-    }
+    all.foreach(k => bridge.registerFunction(spark, k.name, k.build))
 }
 
 /** `spark.sql.extensions` entry point:
@@ -98,8 +32,8 @@ object GraftFunctions {
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit =
-    GraftFunctions.all.foreach { case (name, builder) =>
-      ext.injectFunction((FunctionIdentifier(name),
-        new ExpressionInfo("graft.functions", name), builder))
+    GraftFunctions.all.foreach { k =>
+      ext.injectFunction((FunctionIdentifier(k.name),
+        new ExpressionInfo("graft.functions", k.name), k.build))
     }
 }

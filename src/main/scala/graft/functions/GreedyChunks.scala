@@ -1,11 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.graft.bridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -78,33 +74,14 @@ object GreedyChunkKernel {
   * [[Lz78PhraseCount]]: one static call inside whole-stage codegen,
   * interpreted fallback sharing the identical kernel.
   */
-case class GreedyChunkEnds(child: Expression, maxChars: Int)
-    extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType if maxChars > 0 => TypeCheckResult.TypeCheckSuccess
-    case StringType => TypeCheckResult.TypeCheckFailure(
-      s"greedy_chunk_ends needs maxChars > 0, got $maxChars")
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"greedy_chunk_ends needs a string child, got $t")
+object GreedyChunkEnds extends Kernel("greedy_chunk_ends", 1, Seq("max chunk chars")) {
+  def bind(t: Seq[DataType], s: Seq[Int]): Either[String, (String, DataType)] = t.head match {
+    case StringType if s(0) > 0 =>
+      Right("GreedyChunkKernel.chunkEnds" -> ArrayType(IntegerType, containsNull = false))
+    case StringType => Left(s"greedy_chunk_ends needs maxChars > 0, got ${s(0)}")
+    case other => Left(s"greedy_chunk_ends needs a string child, got $other")
   }
 
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def prettyName: String = "greedy_chunk_ends"
-
-  override protected def nullSafeEval(a: Any): Any =
-    GreedyChunkKernel.chunkEnds(a.asInstanceOf[UTF8String], maxChars)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.functions.GreedyChunkKernel.chunkEnds($a, $maxChars);")
-
-  override protected def withNewChildInternal(newChild: Expression): GreedyChunkEnds =
-    copy(child = newChild)
-}
-
-object GreedyChunkEnds {
   /** Column-API entry point. */
-  def apply(a: Column, maxChars: Int): Column =
-    bridge.column(GreedyChunkEnds(bridge.expression(a), maxChars))
+  def apply(a: Column, maxChars: Int): Column = call(Seq(a), maxChars)
 }

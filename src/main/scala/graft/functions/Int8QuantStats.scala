@@ -2,11 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.graft.bridge
 import org.apache.spark.sql.types._
 
 /** Fused int8-quantization statistics kernel, shared by interpreted
@@ -30,10 +26,6 @@ import org.apache.spark.sql.types._
   */
 object Int8QuantKernel {
 
-  private def result(maxabs: Double, sumQ: Long, minQ: Long, maxQ: Long,
-                     err: Double): InternalRow =
-    InternalRow(maxabs, sumQ, minQ, maxQ, err)
-
   def statsF(a: ArrayData): InternalRow = stats(a, isFloat = true)
   def statsD(a: ArrayData): InternalRow = stats(a, isFloat = false)
 
@@ -47,7 +39,7 @@ object Int8QuantKernel {
       if (v > maxabs) maxabs = v
       i += 1
     }
-    if (n == 0 || maxabs == 0.0) return result(maxabs, 0L, 0L, 0L, 0.0)
+    if (n == 0 || maxabs == 0.0) return InternalRow(maxabs, 0L, 0L, 0L, 0.0)
     val c = maxabs / 127.0
     var sumQ = 0L
     var minQ = Long.MaxValue
@@ -68,7 +60,7 @@ object Int8QuantKernel {
       qq += qd * qd
       i += 1
     }
-    result(maxabs, sumQ, minQ, maxQ, xx - 2.0 * c * xq + c * c * qq)
+    InternalRow(maxabs, sumQ, minQ, maxQ, xx - 2.0 * c * xq + c * c * qq)
   }
 }
 
@@ -80,45 +72,20 @@ object Int8QuantKernel {
   * this is one fused loop inside whole-stage codegen, the same
   * HOF→kernel promotion as [[DotProductD]] and the MinHash kernels.
   */
-case class Int8QuantStats(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) | ArrayType(DoubleType, _) =>
-      TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"int8_quant_stats needs an array<float|double> child, got $t")
-  }
-
-  override def dataType: DataType = StructType(Seq(
+object Int8QuantStats extends Kernel("int8_quant_stats", 1, Nil) {
+  private val result = StructType(Seq(
     StructField("maxabs", DoubleType, nullable = false),
     StructField("sum_q", LongType, nullable = false),
     StructField("min_q", LongType, nullable = false),
     StructField("max_q", LongType, nullable = false),
     StructField("recon_err", DoubleType, nullable = false)))
 
-  override def prettyName: String = "int8_quant_stats"
-
-  private def kernel: String = child.dataType match {
-    case ArrayType(FloatType, _) => "statsF"
-    case _ => "statsD"
+  def bind(t: Seq[DataType], s: Seq[Int]): Either[String, (String, DataType)] = t.head match {
+    case ArrayType(FloatType, _) => Right("Int8QuantKernel.statsF" -> result)
+    case ArrayType(DoubleType, _) => Right("Int8QuantKernel.statsD" -> result)
+    case other => Left(s"int8_quant_stats needs an array<float|double> child, got $other")
   }
 
-  override protected def nullSafeEval(a: Any): Any = {
-    val arr = a.asInstanceOf[ArrayData]
-    if (kernel == "statsF") Int8QuantKernel.statsF(arr)
-    else Int8QuantKernel.statsD(arr)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.functions.Int8QuantKernel.$kernel($a);")
-
-  override protected def withNewChildInternal(newChild: Expression): Int8QuantStats =
-    copy(child = newChild)
-}
-
-object Int8QuantStats {
   /** Column-API entry point. */
-  def apply(a: Column): Column =
-    bridge.column(Int8QuantStats(bridge.expression(a)))
+  def apply(a: Column): Column = call(Seq(a))
 }

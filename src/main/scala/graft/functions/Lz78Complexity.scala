@@ -1,10 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.graft.bridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -62,30 +58,12 @@ object Lz78Kernel {
   * inside whole-stage codegen — the same HOF→kernel promotion as
   * [[DotProductD]] / [[Int8QuantStats]].
   */
-case class Lz78PhraseCount(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"lz78_phrase_count needs a string child, got $t")
+object Lz78PhraseCount extends Kernel("lz78_phrase_count", 1, Nil) {
+  def bind(t: Seq[DataType], s: Seq[Int]): Either[String, (String, DataType)] = t.head match {
+    case StringType => Right("Lz78Kernel.count" -> IntegerType)
+    case other => Left(s"lz78_phrase_count needs a string child, got $other")
   }
 
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "lz78_phrase_count"
-
-  override protected def nullSafeEval(a: Any): Any =
-    Lz78Kernel.count(a.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.functions.Lz78Kernel.count($a);")
-
-  override protected def withNewChildInternal(newChild: Expression): Lz78PhraseCount =
-    copy(child = newChild)
-}
-
-object Lz78PhraseCount {
   /** Column-API entry point. */
-  def apply(a: Column): Column =
-    bridge.column(Lz78PhraseCount(bridge.expression(a)))
+  def apply(a: Column): Column = call(Seq(a))
 }

@@ -1,11 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.graft.bridge
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -27,20 +24,6 @@ object RollingHashUtil {
   private val M = 2147483647L
   private val B = 31L
 
-  /** Winnowing fingerprint selection (Schleimer et al., MOSS): the k-gram
-    * Rabin-Karp hashes of the text, reduced to the SET of per-window
-    * minima over every `w` consecutive hashes — the guarantee is that
-    * any shared substring of length ≥ k + w − 1 yields at least one
-    * shared selected fingerprint, at ~2/(w+1) of the full hash density.
-    * Returns the distinct selected values sorted ascending (position
-    * data is deliberately dropped: downstream joins need the set, and
-    * a set output keeps the tie-breaking rule out of the contract, so
-    * the DuckDB oracle can state it as `list_distinct(list_transform
-    * (..., i -> list_min(h[i+1:i+w])))`). Texts shorter than k return
-    * an empty array; k ≤ length < k+w−1 selects the single global min.
-    *
-    * O(n) via a monotonic deque over the rolled hashes.
-    */
   /** UTF-16 → code points (all window arithmetic is in code points so
     * alignment matches DuckDB's `generate_series`/`len` semantics).
     */
@@ -91,6 +74,20 @@ object RollingHashUtil {
     new GenericArrayData(positionHashes(cp, n, k))
   }
 
+  /** Winnowing fingerprint selection (Schleimer et al., MOSS): the k-gram
+    * Rabin-Karp hashes of the text, reduced to the SET of per-window
+    * minima over every `w` consecutive hashes — the guarantee is that
+    * any shared substring of length ≥ k + w − 1 yields at least one
+    * shared selected fingerprint, at ~2/(w+1) of the full hash density.
+    * Returns the distinct selected values sorted ascending (position
+    * data is deliberately dropped: downstream joins need the set, and
+    * a set output keeps the tie-breaking rule out of the contract, so
+    * the DuckDB oracle can state it as `list_distinct(list_transform
+    * (..., i -> list_min(h[i+1:i+w])))`). Texts shorter than k return
+    * an empty array; k ≤ length < k+w−1 selects the single global min.
+    *
+    * O(n) via a monotonic deque over the rolled hashes.
+    */
   def winnow(s: UTF8String, k: Int, w: Int): GenericArrayData = {
     val (cp, n) = codePoints(s.toString)
     val hs = positionHashes(cp, n, k)
@@ -194,41 +191,14 @@ object RollingHashUtil {
   }
 
   def rollingHash(s: UTF8String, window: Int): GenericArrayData = {
-    val str = s.toString
-    // Decode UTF-16 to code points once; all window arithmetic below is
-    // in code points so alignment matches DuckDB's generate_series/len.
-    val cp = new Array[Int](str.length)
-    var n = 0
-    var u = 0
-    while (u < str.length) {
-      val c = str.codePointAt(u)
-      cp(n) = c
-      n += 1
-      u += Character.charCount(c)
-    }
+    val (cp, n) = codePoints(s.toString)
     var content = 0L
     var i = 0
     while (i < n) { content = (content * B + cp(i)) % M; i += 1 }
-    if (n <= window) return new GenericArrayData(Array(content, content))
-
-    // 31^(window-1) mod M, for removing the outgoing code point
-    var bPow = 1L
-    i = 1
-    while (i < window) { bPow = (bPow * B) % M; i += 1 }
-
-    var h = 0L
-    i = 0
-    while (i < window) { h = (h * B + cp(i)) % M; i += 1 }
-    var minH = h
-    var start = 1
-    while (start <= n - window) {
-      val out = (cp(start - 1).toLong * bPow) % M
-      h = (((h - out + M) % M) * B + cp(start + window - 1)) % M
-      if (h < minH) minH = h
-      start += 1
-    }
-    new GenericArrayData(Array(content, minH))
+    val winnowMin = if (n <= window) content else positionHashes(cp, n, window).min
+    new GenericArrayData(Array(content, winnowMin))
   }
+
 }
 
 /** Native codegen'd `rolling_hash(text, window)` → `array<bigint>` of
@@ -237,34 +207,14 @@ object RollingHashUtil {
   * pipeline that ran on the interpreted lambda path at O(window·n) with
   * per-element boxing.
   */
-case class RollingHash(child: Expression, window: Int)
-    extends UnaryExpression {
-  require(window >= 2, s"window must be >= 2, got $window")
+object RollingHash extends Kernel("rolling_hash", 1, Seq("window")) {
+  override def check(s: Seq[Int]): Unit =
+    require(s(0) >= 2, s"window must be >= 2, got ${s(0)}")
+  def bind(t: Seq[DataType], s: Seq[Int]): Either[String, (String, DataType)] =
+    stringChild(t, "RollingHashUtil.rollingHash", longs)
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType.isInstanceOf[StringType]) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"rolling_hash needs a string child, got ${child.dataType}")
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = child.nullable
-  override def prettyName: String = "rolling_hash"
-
-  override protected def nullSafeEval(input: Any): Any =
-    RollingHashUtil.rollingHash(input.asInstanceOf[UTF8String], window)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.RollingHashUtil.rollingHash($c, $window);")
-
-  override protected def withNewChildInternal(newChild: Expression): RollingHash =
-    copy(child = newChild)
-}
-
-object RollingHash {
   /** Column-API entry point: `RollingHash.of($"text", 16)`. */
-  def of(text: Column, window: Int): Column =
-    bridge.column(RollingHash(bridge.expression(text), window))
+  def of(text: Column, window: Int): Column = call(Seq(text), window)
 }
 
 /** Native codegen'd `window_hashes(text, k)` → `array<bigint>` of the
@@ -274,34 +224,13 @@ object RollingHash {
   * interpreted `transform(sequence(...), aggregate(...))` pipeline it
   * replaces in hot paths.
   */
-case class WindowHashes(child: Expression, k: Int)
-    extends UnaryExpression {
-  require(k >= 2, s"k must be >= 2, got $k")
+object WindowHashes extends Kernel("window_hashes", 1, Seq("k-gram width k")) {
+  override def check(s: Seq[Int]): Unit = require(s(0) >= 2, s"k must be >= 2, got ${s(0)}")
+  def bind(t: Seq[DataType], s: Seq[Int]): Either[String, (String, DataType)] =
+    stringChild(t, "RollingHashUtil.windowHashes", longs)
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType.isInstanceOf[StringType]) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"window_hashes needs a string child, got ${child.dataType}")
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = child.nullable
-  override def prettyName: String = "window_hashes"
-
-  override protected def nullSafeEval(input: Any): Any =
-    RollingHashUtil.windowHashes(input.asInstanceOf[UTF8String], k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.RollingHashUtil.windowHashes($c, $k);")
-
-  override protected def withNewChildInternal(newChild: Expression): WindowHashes =
-    copy(child = newChild)
-}
-
-object WindowHashes {
   /** Column-API entry point: `WindowHashes.of($"text", 16)`. */
-  def of(text: Column, k: Int): Column =
-    bridge.column(WindowHashes(bridge.expression(text), k))
+  def of(text: Column, k: Int): Column = call(Seq(text), k)
 }
 
 /** Native codegen'd `dup_span_islands(positions, k)` →
@@ -312,110 +241,46 @@ object WindowHashes {
   * duplicate-span detection, one call per doc instead of a lag window,
   * a running-sum window and a regroup over every flagged window.
   */
-case class DupSpanIslands(child: Expression, k: Int)
-    extends UnaryExpression {
-  require(k >= 2, s"k must be >= 2, got $k")
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"dup_span_islands needs array<bigint> positions, got $other")
+object DupSpanIslands extends Kernel("dup_span_islands", 1, Seq("k-gram width k")) {
+  override def check(s: Seq[Int]): Unit = require(s(0) >= 2, s"k must be >= 2, got ${s(0)}")
+  def bind(t: Seq[DataType], s: Seq[Int]): Either[String, (String, DataType)] = t.head match {
+    case ArrayType(LongType, _) => Right("RollingHashUtil.spanIslands" -> ArrayType(StructType(
+      Seq("span_start", "span_end", "span_len", "n_windows")
+        .map(StructField(_, LongType, nullable = false))), containsNull = false))
+    case other => Left(s"dup_span_islands needs array<bigint> positions, got $other")
   }
 
-  override def dataType: DataType = ArrayType(DupSpanIslands.islandType,
-    containsNull = false)
-  override def nullable: Boolean = child.nullable
-  override def prettyName: String = "dup_span_islands"
-
-  override protected def nullSafeEval(input: Any): Any =
-    RollingHashUtil.spanIslands(input.asInstanceOf[ArrayData], k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.RollingHashUtil.spanIslands($c, $k);")
-
-  override protected def withNewChildInternal(newChild: Expression): DupSpanIslands =
-    copy(child = newChild)
-}
-
-object DupSpanIslands {
-  val islandType: StructType = StructType(
-    Seq("span_start", "span_end", "span_len", "n_windows")
-      .map(StructField(_, LongType, nullable = false)))
-
   /** Column-API entry point: `DupSpanIslands.of($"pos", 32)`. */
-  def of(positions: Column, k: Int): Column =
-    bridge.column(DupSpanIslands(bridge.expression(positions), k))
+  def of(positions: Column, k: Int): Column = call(Seq(positions), k)
 }
 
 /** Native codegen'd `cut_dup_spans(text, positions, k)` → the text with
   * the [[DupSpanIslands]] spans of the same positions removed, cut by
   * code point (see [[RollingHashUtil.cutSpans]]).
   */
-case class CutDupSpans(left: Expression, right: Expression, k: Int)
-    extends BinaryExpression {
-  require(k >= 2, s"k must be >= 2, got $k")
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (_: StringType, ArrayType(LongType, _)) => TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"cut_dup_spans needs (string, array<bigint>), got ($l, $r)")
+object CutDupSpans extends Kernel("cut_dup_spans", 2, Seq("k-gram width k")) {
+  override def check(s: Seq[Int]): Unit = require(s(0) >= 2, s"k must be >= 2, got ${s(0)}")
+  def bind(t: Seq[DataType], s: Seq[Int]): Either[String, (String, DataType)] =
+    (t(0), t(1)) match {
+      case (text: StringType, ArrayType(LongType, _)) => Right("RollingHashUtil.cutSpans" -> text)
+      case (l, r) => Left(s"cut_dup_spans needs (string, array<bigint>), got ($l, $r)")
     }
 
-  override def dataType: DataType = left.dataType
-  override def prettyName: String = "cut_dup_spans"
-
-  override protected def nullSafeEval(text: Any, pos: Any): Any =
-    RollingHashUtil.cutSpans(text.asInstanceOf[UTF8String],
-      pos.asInstanceOf[ArrayData], k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (t, p) =>
-      s"${ev.value} = graft.functions.RollingHashUtil.cutSpans($t, $p, $k);")
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): CutDupSpans =
-    copy(left = newLeft, right = newRight)
-}
-
-object CutDupSpans {
   /** Column-API entry point: `CutDupSpans.of($"text", $"pos", 32)`. */
-  def of(text: Column, positions: Column, k: Int): Column =
-    bridge.column(CutDupSpans(bridge.expression(text),
-      bridge.expression(positions), k))
+  def of(text: Column, positions: Column, k: Int): Column = call(Seq(text, positions), k)
 }
 
 /** Native codegen'd `winnow(text, k, w)` → sorted distinct
   * `array<bigint>` of winnowed k-gram fingerprints (see
   * [[RollingHashUtil.winnow]]).
   */
-case class WinnowFingerprints(child: Expression, k: Int, w: Int)
-    extends UnaryExpression {
-  require(k >= 2 && w >= 2, s"k and w must be >= 2, got k=$k w=$w")
+object WinnowFingerprints
+    extends Kernel("winnow", 1, Seq("k-gram width k", "selection window w")) {
+  override def check(s: Seq[Int]): Unit =
+    require(s(0) >= 2 && s(1) >= 2, s"k and w must be >= 2, got k=${s(0)} w=${s(1)}")
+  def bind(t: Seq[DataType], s: Seq[Int]): Either[String, (String, DataType)] =
+    stringChild(t, "RollingHashUtil.winnow", longs)
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType.isInstanceOf[StringType]) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"winnow needs a string child, got ${child.dataType}")
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = child.nullable
-  override def prettyName: String = "winnow"
-
-  override protected def nullSafeEval(input: Any): Any =
-    RollingHashUtil.winnow(input.asInstanceOf[UTF8String], k, w)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.RollingHashUtil.winnow($c, $k, $w);")
-
-  override protected def withNewChildInternal(newChild: Expression): WinnowFingerprints =
-    copy(child = newChild)
-}
-
-object WinnowFingerprints {
   /** Column-API entry point: `WinnowFingerprints.of($"text", 16, 8)`. */
-  def of(text: Column, k: Int, w: Int): Column =
-    bridge.column(WinnowFingerprints(bridge.expression(text), k, w))
+  def of(text: Column, k: Int, w: Int): Column = call(Seq(text), k, w)
 }

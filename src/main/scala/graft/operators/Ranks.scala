@@ -67,18 +67,24 @@ object Ranks {
     * deterministic at any parallelism.
     */
   /** The shared range-stage: range-partition on the order, pin the
-    * partition id, materialize once (localCheckpoint — the ids must be
-    * frozen between the count pass and the read-off), and collect the
-    * numPartitions-row per-partition counts. [[global]] and [[kth]]
-    * are both this stage plus a different read-off.
+    * partition id, and materialize once (localCheckpoint — the ids must
+    * be frozen between the per-partition aggregate pass and the
+    * read-off). Every entry point below is this stage plus its own
+    * numPartitions-row aggregate and read-off.
+    */
+  private def rangeStage(df: DataFrame, order: Seq[Column]): DataFrame = {
+    val nParts = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+    df.repartitionByRange(nParts, order: _*)
+      .withColumn("__pid", spark_partition_id())
+      .localCheckpoint()
+  }
+
+  /** [[rangeStage]] plus its per-partition row counts — the staging of
+    * [[global]] and [[kth]].
     */
   private def rangeStaged(df: DataFrame,
                           order: Seq[Column]): (DataFrame, Array[(Int, Long)]) = {
-    val spark = df.sparkSession
-    val nParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val staged = df.repartitionByRange(nParts, order: _*)
-      .withColumn("__pid", spark_partition_id())
-      .localCheckpoint()
+    val staged = rangeStage(df, order)
     val counts = staged.groupBy(col("__pid")).agg(count(lit(1)).as("__n"))
       .collect().map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)
     (staged, counts)
@@ -153,11 +159,7 @@ object Ranks {
                    order: Column*): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val nParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val staged = df
-      .repartitionByRange(nParts, (col(tagCol).asc +: order): _*)
-      .withColumn("__pid", spark_partition_id())
-      .localCheckpoint()
+    val staged = rangeStage(df, col(tagCol).asc +: order)
     val counts = staged.groupBy(col("__pid"), col(tagCol))
       .agg(count(lit(1)).as("__n"))
       .collect().map(r => (r.getInt(0), r.getString(1), r.getLong(2)))
@@ -203,10 +205,7 @@ object Ranks {
                 order: Column*): DataFrame = {
     val spark = df.sparkSession
     val d38 = org.apache.spark.sql.types.DecimalType(38, 0)
-    val nParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val staged = df.repartitionByRange(nParts, order: _*)
-      .withColumn("__pid", spark_partition_id())
-      .localCheckpoint()
+    val staged = rangeStage(df, order)
     val sums = staged.groupBy(col("__pid"))
       .agg(sum(col(valueCol).cast(d38)).as("__s"))
       .collect()
@@ -253,10 +252,7 @@ object Ranks {
                 order: Column*): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val nParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val staged = df.repartitionByRange(nParts, order: _*)
-      .withColumn("__pid", spark_partition_id())
-      .localCheckpoint()
+    val staged = rangeStage(df, order)
     val maxes = staged.groupBy(col("__pid"))
       .agg(max(col(valueCol).cast("long")).as("__m"))
       .collect()

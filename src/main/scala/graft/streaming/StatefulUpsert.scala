@@ -4,7 +4,7 @@ import graft.operators.VersionedUpsert.newer
 import graft.schema.ChangeEvent.Booking
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
 
 /** Pure-streaming variants of the versioned-upsert collapse — the
   * bounded-state alternative SURVEY.md T4 reserves for when the
@@ -49,42 +49,6 @@ object StatefulUpsert {
           state.update(cur)
           cur
       }
-  }
-
-  /** State-processing-v2 form of [[latestPerKey]]: the same one-winner-
-    * per-key collapse on Spark 4's `transformWithState` API — typed
-    * `ValueState` through a `StatefulProcessor`, RocksDB-backed, with
-    * per-state TTL available (`TTLConfig`) where `mapGroupsWithState`
-    * offers only whole-row timeouts. Functionally identical to
-    * [[latestPerKey]] (spec-checked against the same golden table);
-    * this is the forward-looking surface for custom streaming state.
-    */
-  class LatestBookingProcessor extends StatefulProcessor[String, Booking, Booking] {
-    @transient private var state: ValueState[Booking] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      state = getHandle.getValueState[Booking]("latest",
-        Encoders.product[Booking], TTLConfig.NONE)
-
-    override def handleInputRows(key: String, rows: Iterator[Booking],
-                                 timerValues: TimerValues): Iterator[Booking] = {
-      var cur = if (state.exists()) state.get() else null
-      rows.foreach { r => if (cur == null || newer(r, cur)) cur = r }
-      state.update(cur)
-      Iterator.single(cur)
-    }
-  }
-
-  /** [[latestPerKey]] via `transformWithState` (requires the RocksDB
-    * state store provider). Use `outputMode("update")`.
-    */
-  def latestPerKeyV2(upserts: Dataset[Booking]): Dataset[Booking] = {
-    implicit val enc = Encoders.product[Booking]
-    implicit val senc = Encoders.STRING
-    upserts
-      .groupByKey(_.booking_id)
-      .transformWithState(new LatestBookingProcessor,
-        TimeMode.None(), OutputMode.Update())
   }
 
   /** Bounded-state streaming dedup — SURVEY T4's lighter-weight

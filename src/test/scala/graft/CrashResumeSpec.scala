@@ -7,17 +7,17 @@ import graft.streaming.{StatefulUpsert, StreamingFunnel}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
-/** Crash/restart proof for the `transformWithState` paths (round-12
+/** Crash/restart proof for the stateful streaming operators (round-12
   * verdict item 5): stop the query mid-stream after batch 1, start a
   * NEW query from the same checkpoint, and assert the end state equals
-  * the uninterrupted run — the RocksDB state store must carry the
-  * value/list state AND the armed event-time timers across the
+  * the uninterrupted run — the state store must carry the per-key
+  * winner (`latestPerKey`, default store), the value/list state AND
+  * the armed event-time timers (`funnelFrontier`, RocksDB) across the
   * restart, and the sink must come out exactly-once (file sink) or
   * collapse-tolerant (foreachBatch + versioned FINAL read).
   *
   * The CdcPipeline checkpoint-resume golden (StreamingSpec) already
-  * covers the flatMapGroupsWithState path; these two close the gap for
-  * the `transformWithState` operators.
+  * covers the flatMapGroupsWithState path.
   */
 class CrashResumeSpec extends SparkSpec {
 
@@ -36,50 +36,48 @@ class CrashResumeSpec extends SparkSpec {
   private def tmp(tag: String): String =
     java.nio.file.Files.createTempDirectory(s"resume-$tag").toString
 
-  test("latestPerKeyV2 kill-and-resume reaches the uninterrupted golden table") {
+  test("latestPerKey kill-and-resume reaches the uninterrupted golden table") {
     implicit val sql = spark.sqlContext
     import spark.implicits._
-    withRocksDb {
-      val upserts = MvTransform(WorkloadFixture.toDf(spark))
-        .as[Booking].collect().toSeq
-      val (wave1, wave2) = upserts.splitAt(upserts.size / 2)
-      val cp = tmp("upsert-cp")
-      val out = tmp("upsert-out")
-      val in = MemoryStream[Booking]
-      def start() = StatefulUpsert.latestPerKeyV2(in.toDS())
-        .writeStream.outputMode("update")
-        .option("checkpointLocation", cp)
-        .foreachBatch { (b: org.apache.spark.sql.Dataset[Booking], _: Long) =>
-          b.write.mode("append").parquet(out)
-        }
-        .start()
+    val upserts = MvTransform(WorkloadFixture.toDf(spark))
+      .as[Booking].collect().toSeq
+    val (wave1, wave2) = upserts.splitAt(upserts.size / 2)
+    val cp = tmp("upsert-cp")
+    val out = tmp("upsert-out")
+    val in = MemoryStream[Booking]
+    def start() = StatefulUpsert.latestPerKey(in.toDS())
+      .writeStream.outputMode("update")
+      .option("checkpointLocation", cp)
+      .foreachBatch { (b: org.apache.spark.sql.Dataset[Booking], _: Long) =>
+        b.write.mode("append").parquet(out)
+      }
+      .start()
 
-      // batch 1, then KILL
-      val q1 = start()
-      in.addData(wave1)
-      q1.processAllAvailable()
-      q1.stop()
+    // batch 1, then KILL
+    val q1 = start()
+    in.addData(wave1)
+    q1.processAllAvailable()
+    q1.stop()
 
-      // wave 2 lands while the query is down; a NEW query resumes from
-      // the checkpoint — recovered per-key max-version state must beat
-      // stale replays exactly as an uninterrupted run would
-      in.addData(wave2)
-      val q2 = start()
-      try {
-        q2.processAllAvailable()
-      } finally q2.stop()
+    // wave 2 lands while the query is down; a NEW query resumes from
+    // the checkpoint — recovered per-key max-version state must beat
+    // stale replays exactly as an uninterrupted run would
+    in.addData(wave2)
+    val q2 = start()
+    try {
+      q2.processAllAvailable()
+    } finally q2.stop()
 
-      // foreachBatch is at-least-once across the kill boundary; the
-      // versioned FINAL read collapses any replayed emission — the
-      // same at-least-once tolerance the CDC sink contract (S6/A4)
-      // is built on
-      val streamed = VersionedUpsert.finalViewAgg(spark.read.parquet(out))
-        .select("booking_id", "status").collect()
-        .map(r => (r.getString(0), r.getString(1))).sortBy(_._1).toSeq
-      assert(streamed === Seq(
-        ("b1", "Open"), ("b10", "Completed"), ("b2", "Created"),
-        ("b7", "Completed"), ("b8", "Cancelled"), ("b9", "Cancelled")))
-    }
+    // foreachBatch is at-least-once across the kill boundary; the
+    // versioned FINAL read collapses any replayed emission — the
+    // same at-least-once tolerance the CDC sink contract (S6/A4)
+    // is built on
+    val streamed = VersionedUpsert.finalViewAgg(spark.read.parquet(out))
+      .select("booking_id", "status").collect()
+      .map(r => (r.getString(0), r.getString(1))).sortBy(_._1).toSeq
+    assert(streamed === Seq(
+      ("b1", "Open"), ("b10", "Completed"), ("b2", "Created"),
+      ("b7", "Completed"), ("b8", "Cancelled"), ("b9", "Cancelled")))
   }
 
   private val hourUs = 3600L * 1000 * 1000

@@ -69,38 +69,6 @@ class StatefulStreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("latestPerKeyV2 (transformWithState): reaches the same golden table as latestPerKey") {
-    implicit val sql = spark.sqlContext
-    import graft.operators.{MvTransform, VersionedUpsert}
-    import graft.sources.WorkloadFixture
-    import spark.implicits._
-    val prevProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val upserts = MvTransform(WorkloadFixture.toDf(spark))
-      .as[Booking].collect().toSeq
-    val (wave1, wave2) = upserts.splitAt(upserts.size / 2)
-    val in = MemoryStream[Booking]
-    val q = StatefulUpsert.latestPerKeyV2(in.toDS())
-      .writeStream.outputMode("update").format("memory").queryName("goldenV2").start()
-    try {
-      in.addData(wave1); q.processAllAvailable()
-      in.addData(wave2); q.processAllAvailable()
-      val streamed = VersionedUpsert.finalViewAgg(spark.table("goldenV2"))
-        .select("booking_id", "status").collect()
-        .map(r => (r.getString(0), r.getString(1))).sortBy(_._1).toSeq
-      assert(streamed === Seq(
-        ("b1", "Open"), ("b10", "Completed"), ("b2", "Created"),
-        ("b7", "Completed"), ("b8", "Cancelled"), ("b9", "Cancelled")))
-    } finally {
-      q.stop()
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
-  }
-
   test("dedupWithinWatermark: replays emit once; downstream FINAL matches batch finalView") {
     implicit val sql = spark.sqlContext
     import graft.operators.VersionedUpsert
